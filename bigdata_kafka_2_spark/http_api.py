@@ -25,9 +25,13 @@ serving` logic. Response shapes mirror the reference exactly:
 The "model1/model2/model3" path segment of the query API names a
 processed dataset slice (the reference's cumulative batch portions,
 ``README.md:117-121``); here it keys into a caller-supplied dict of
-DataFrames, which at scale are partitioned serving tables — lookups
-stay in Spark (predicate-pushed point/substring scans), only the
-bounded result rows are collected.
+DataFrames, each wrapped once, at construction, in a
+:class:`serving.QueryTable`. A table whose size estimate fits Spark's
+broadcast cap (``spark.sql.autoBroadcastJoinThreshold``) is collected
+then and every lookup is answered from driver memory, with no Spark job
+per request; a larger one, at scale a partitioned serving table, stays
+in Spark (predicate-pushed point/substring scans, only the bounded
+result rows collected). ``decisions`` records each table's gate.
 """
 
 from __future__ import annotations
@@ -104,7 +108,10 @@ class EngineHTTPServer:
         port: int = 0,
     ):
         self.model_server = model_server
-        self.query_tables = query_tables or {}
+        self.query_tables = {
+            name: serving.QueryTable(t) for name, t in (query_tables or {}).items()
+        }
+        self.decisions = {name: t.decision for name, t in self.query_tables.items()}
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -141,7 +148,7 @@ class EngineHTTPServer:
                     traceback.print_exc()
                     self._send(500, {"error": "query failed"})
 
-            def _table(self, name: str) -> DataFrame | None:
+            def _table(self, name: str) -> serving.QueryTable | None:
                 t = outer.query_tables.get(name)
                 if t is None:
                     self._send(
@@ -161,14 +168,7 @@ class EngineHTTPServer:
                 if not terms or not terms[0]:
                     self._send(400, {"error": "missing ?allergy= parameter"})
                     return
-                matched = serving.find_allergen(table, terms[0]).select(
-                    "fdc_id", "description"
-                )
-                # True total (cheap aggregate) so match_count keeps the
-                # reference API's meaning even when the row list is
-                # truncated at MAX_LIST_ROWS.
-                total = matched.count()
-                rows = matched.limit(MAX_LIST_ROWS).collect()
+                total, rows = table.find_allergen(terms[0], MAX_LIST_ROWS)
                 self._send(
                     200,
                     {
@@ -176,7 +176,7 @@ class EngineHTTPServer:
                         "match_count": total,
                         "returned_count": len(rows),
                         "truncated": total > len(rows),
-                        "foods": [r.asDict() for r in rows],
+                        "foods": rows,
                     },
                 )
 
@@ -186,20 +186,22 @@ class EngineHTTPServer:
                     return
                 try:
                     key = int(fdc_id)
+                    if not -(2**63) <= key < 2**63:  # fits no Spark integral type
+                        raise ValueError(fdc_id)
                 except ValueError:
                     self._send(400, {"error": f"invalid fdc_id '{fdc_id}'"})
                     return
-                rows = serving.food_details(table, key).limit(1).collect()
-                if not rows:
+                row = table.food_details(key)
+                if row is None:
                     self._send(404, {"error": f"fdc_id {key} not found"})
                     return
-                self._send(200, rows[0].asDict())
+                self._send(200, row)
 
             def _stats(self, name: str) -> None:
                 table = self._table(name)
                 if table is None:
                     return
-                self._send(200, serving.stats(table))
+                self._send(200, table.stats())
 
             def do_POST(self):  # noqa: N802
                 parts = [p for p in urlparse(self.path).path.split("/") if p]
@@ -255,6 +257,8 @@ class EngineHTTPServer:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
+        for t in self.query_tables.values():
+            t.close()
 
     def __enter__(self) -> "EngineHTTPServer":
         return self.start()

@@ -6,7 +6,12 @@ Semantics preserved exactly: cosine distance, k=5 default, exact
 search, results ascending by distance. The serving table stays a
 distributed DataFrame; a probe is broadcast against it, so capacity is
 bounded by cluster storage instead of driver RAM
-(the reference's stated capacity bound, BASELINE.md).
+(the reference's stated capacity bound, BASELINE.md). Unlike the query
+API's tables, which ``serving.QueryTable`` collects to the driver when
+their size estimate fits the broadcast cap, this table is not gated:
+one top-k job per request whatever its size. Only the probe is built on
+the driver (``serving.scaled_probe``), so that job is the request's
+only one.
 
 Vectors here are plain ``array<double>`` columns (the storage/API
 boundary form, SURVEY §1.2) — use ``vector_to_array`` on
