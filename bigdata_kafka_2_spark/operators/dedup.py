@@ -1569,7 +1569,11 @@ def _broadcast_byte_cap(spark) -> int:
     driver and resident on every executor, and JVM HashedRelation
     overhead runs 2-4x the raw data bytes — heap/4 of measured raw
     bytes keeps the worst-case footprint inside the heap instead of
-    asserting a fixed budget the deployment may not have.
+    asserting a fixed budget the deployment may not have. With
+    ``get_spark``'s default heap (a quarter of the host's memory,
+    capped at 48g) the 1.5 GB ceiling binds only on hosts with at
+    least ~22.4 GiB; a 15.7 GiB host gets a ~4 GB heap and a ~1.0 GB
+    budget, so fewer relations take the forced broadcast there.
 
     The driver heap is read from the LIVE JVM
     (``Runtime.getRuntime().maxMemory()`` through the Py4J gateway)

@@ -13,12 +13,21 @@ engine keeps codegen ON and configures the session for analytic work:
   down from there.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
 - Arrow enabled for any pandas interchange (Pandas UDFs, toPandas).
+- Driver heap (``spark.driver.memory``) sized to the host: a quarter of
+  its memory, never above 48g. The quarter is HotSpot's own
+  ``MaxRAMPercentage`` default, the heap a JVM takes when launched with
+  no ``-Xmx``; the host's memory is physical RAM lowered to the cgroup
+  limit where one is set. A fixed 48g on a host with less RAM than that
+  lets G1 grow the heap past physical memory until the kernel kills the
+  JVM. Hosts with at least 192 GiB keep 48g; where the memory cannot be
+  read, 48g stays. ``$SPARK_GRAFT_DRIVER_MEM`` overrides, used verbatim.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Iterable
 
 from pyspark.sql import SparkSession
 
@@ -27,6 +36,98 @@ from pyspark.sql import SparkSession
 #: tmpfs is typically capped at half of RAM; an unexpectedly large spill
 #: (e.g. the 10x scale probe) must degrade to disk, not fail ENOSPC.
 _SHM_MIN_FREE_BYTES = 16 << 30
+
+
+#: Ceiling of the default driver heap, sized for a 32-core bench host.
+_DRIVER_MEM_CAP_BYTES = 48 << 30
+
+
+def host_memory_bytes(
+    ram: int | None, cgroup_limits: Iterable[str | None] = ()
+) -> int | None:
+    """The host's memory: ``ram`` lowered to the smallest cgroup limit.
+
+    ``cgroup_limits`` are the raw contents of limit files; ``max`` (v2
+    "no limit"), unreadable (``None``) or unparseable ones are ignored,
+    and v1's "no limit" (a value near 2**63) never lowers RAM. ``None``
+    when no figure is known.
+    """
+    known = [ram] if ram and ram > 0 else []
+    for text in cgroup_limits:
+        try:
+            limit = int((text or "").strip())
+        except ValueError:
+            continue
+        if limit > 0:
+            known.append(limit)
+    return min(known) if known else None
+
+
+def default_driver_memory(host_bytes: int | None) -> str:
+    """``spark.driver.memory`` for a host with ``host_bytes`` of memory:
+    a quarter of it (HotSpot's ``MaxRAMPercentage`` default) in whole
+    MiB, capped at 48g; 48g when the memory is unknown."""
+    if not host_bytes:
+        return f"{_DRIVER_MEM_CAP_BYTES >> 30}g"
+    return f"{min(_DRIVER_MEM_CAP_BYTES, host_bytes // 4) >> 20}m"
+
+
+def _cgroup_limit_files() -> list[str]:
+    """Memory-limit files that bound this process: v2 ``memory.max`` and
+    v1 ``memory.limit_in_bytes``, at the mount root (the process's own
+    cgroup inside a container's cgroup namespace) and at the path
+    ``/proc/self/cgroup`` names. Limits of enclosing cgroups also bind,
+    so the smallest readable one is the ceiling."""
+    files = [
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ]
+    try:
+        with open("/proc/self/cgroup") as f:
+            for line in f:
+                _, controllers, path = line.rstrip("\n").split(":", 2)
+                path = path.lstrip("/")
+                if not controllers:
+                    files.append(
+                        os.path.join("/sys/fs/cgroup", path, "memory.max")
+                    )
+                elif "memory" in controllers.split(","):
+                    files.append(
+                        os.path.join(
+                            "/sys/fs/cgroup/memory", path,
+                            "memory.limit_in_bytes",
+                        )
+                    )
+    except (OSError, ValueError):
+        pass
+    return files
+
+
+def _read_text(path: str) -> str | None:
+    try:
+        with open(path) as f:
+            return f.read()
+    except OSError:
+        return None
+
+
+def _read_host_memory_bytes() -> int | None:
+    """Physical RAM (``os.sysconf``) lowered to this process's cgroup
+    memory limit; ``None`` when neither can be read."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        ram = None
+    return host_memory_bytes(
+        ram, (_read_text(p) for p in _cgroup_limit_files())
+    )
+
+
+def _driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM`` verbatim, else the host-sized default."""
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(
+        _read_host_memory_bytes()
+    )
 
 
 def _local_dir() -> str:
@@ -55,7 +156,11 @@ def get_spark(
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all local cores. In
     local mode the driver is the only JVM, so ``spark.driver.memory``
     is the sole memory knob; on a cluster these settings move to
-    executor config unchanged.
+    executor config unchanged. It defaults to a quarter of the host's
+    memory (RAM or cgroup limit, whichever is lower), capped at 48g:
+    the heap HotSpot itself picks when given no ``-Xmx``
+    (``MaxRAMPercentage`` = 25). ``$SPARK_GRAFT_DRIVER_MEM`` overrides
+    it verbatim (``perfbench`` pins 3g).
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -80,7 +185,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         # Shuffle/spill scratch space: prefer RAM-backed tmpfs when the
         # host provides one ($SPARK_GRAFT_LOCAL_DIR overrides). Local-mode
         # shuffles at test SFs are MBs — far below tmpfs capacity — and
