@@ -25,7 +25,11 @@ a 15x apparent regression on an untouched plan that a same-code
 quiet run measured at 4.2 s), and min-of-N is the standard way to
 read through scheduler noise to the plan's real cost. Per-query max
 is emitted alongside under "queries_max" so a noisy environment is
-visible in the record rather than silently folded in.
+visible in the record rather than silently folded in. After every run,
+outside the timed region, every cached frame and persisted RDD is
+released, so no run reads blocks an earlier run pinned. The detail
+record names the ``spark_master`` and ``default_parallelism`` it ran
+at.
 
 NOISE PROTOCOL (r8 advice #6 / r9 verdict #3): a reported minimum
 must be CORROBORATED — the two fastest runs within
@@ -349,6 +353,12 @@ def main() -> None:
         )
         return round(time.perf_counter() - t0, 3)
 
+    def release_pins() -> None:
+        spark.catalog.clearCache()
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        for key in list(rdds.keySet()):
+            rdds.get(key).unpersist(True)
+
     def run_once(name: str) -> float:
         q = registry[name]
         t0 = time.perf_counter()
@@ -356,7 +366,10 @@ def main() -> None:
         # noop sink: full materialization of every output column
         # (count() lets Catalyst prune projection-only work).
         df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        elapsed = time.perf_counter() - t0
+        # untimed: no later run reads this run's pinned blocks
+        release_pins()
+        return elapsed
 
     def corroborated(runs: list[float]) -> bool:
         # ratio band, with an absolute floor: sub-half-second jitter
@@ -495,6 +508,8 @@ def main() -> None:
         "host_anchor": host_anchor,
         "duckdb_sec": duckdb_sec,
         "sf": sf_val,
+        "spark_master": spark.sparkContext.master,
+        "default_parallelism": spark.sparkContext.defaultParallelism,
     }
     print(json.dumps(detail))
     try:

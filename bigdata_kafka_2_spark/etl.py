@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 
 from bigdata_kafka_2_spark.io import read_csv_dir
 from bigdata_kafka_2_spark.ml import pipelines as P
+from bigdata_kafka_2_spark.operators.common import pin
 from bigdata_kafka_2_spark.schema import (
     FOOD_DESCRIPTION_COLUMN,
     FOOD_NUMERIC_COLUMNS,
@@ -83,14 +84,14 @@ def cumulative_slices(
 
     One ranking pass computes the row number (range-bucketed — see
     ``operators.relational.global_row_number``; no single-partition
-    window); each slice is a filter on it — with the input cached, the
+    window); each slice is a filter on it — with the ranking pinned, the
     five slices share the scan (mirrors ``combined_df.persist()``,
     ``spark_model_trainer.py:206``).
     """
     from bigdata_kafka_2_spark.operators.relational import global_row_number
 
     total = df.count()
-    ranked = global_row_number(df, list(order_cols), rn_col="__rn").cache()
+    ranked = pin(global_row_number(df, list(order_cols), rn_col="__rn"))
     return [
         ranked.filter(F.col("__rn") <= n).drop("__rn")
         for n in slice_sizes(total, num_models)

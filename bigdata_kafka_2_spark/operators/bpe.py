@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdata_kafka_2_spark.operators.common import pin
 from bigdata_kafka_2_spark.operators.text import normalize_text
 
 #: End-of-word marker, appended as a separate final symbol so merges
@@ -137,13 +138,12 @@ def learn_bpe_merges(
     ``min_pair_count``.
 
     Driver transfer is ONE row per round (the argmax pair — the CC
-    convergence-check pattern); the vocab table is localCheckpointed
-    per round so round k+1's plan does not replay k merge folds over
+    convergence-check pattern); the vocab table is pinned per round so round k+1's plan does not replay k merge folds over
     the corpus-tokenize lineage. At 100 TB the corpus cost is the one
     initial word count; every round is vocabulary-sized.
     """
     sym = _initial_symbols(word_frequencies(df, text_col, id_col))
-    sym = sym.localCheckpoint(eager=False)
+    sym = pin(sym)
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
         # single-row argmax: min_by over the (−count, left, right)
@@ -169,9 +169,7 @@ def learn_bpe_merges(
             break
         left, right, cnt = row["left"], row["right"], int(row["pair_count"])
         merges.append((left, right, cnt))
-        sym = sym.withColumn(
-            "symbols", _merge_expr(left, right)
-        ).localCheckpoint(eager=False)
+        sym = pin(sym.withColumn("symbols", _merge_expr(left, right)))
     return merges
 
 

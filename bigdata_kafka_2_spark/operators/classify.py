@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bigdata_kafka_2_spark.operators.common import pin
 from bigdata_kafka_2_spark.operators.text import normalize_text
 
 
@@ -87,7 +88,7 @@ def _nb_scores(
 ) -> DataFrame:
     """The shared fit+score table behind the NB surfaces: one row per
     (document, class) with the exact-DECIMAL log-likelihood score."""
-    toks = (
+    toks = pin(
         df.select(
             F.col(id_col),
             F.col(label_col).alias("__y"),
@@ -96,7 +97,6 @@ def _nb_scores(
         .filter(F.col("tok") != "")
         .groupBy(id_col, "__y", "tok")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
     )
     ctc = toks.groupBy(F.col("__y").alias("__c"), "tok").agg(
         F.sum("tf").alias("__ctc")
@@ -121,7 +121,7 @@ def _nb_scores(
         return F.round(col, 4).cast("decimal(28,4)")
 
     # per-class constants: ln prior and ln(T_c + V), both rounded once
-    cls = (
+    cls = pin(
         classes.crossJoin(F.broadcast(consts))
         .select(
             "__c",
@@ -132,7 +132,6 @@ def _nb_scores(
                 "__ldenom"
             ),
         )
-        .localCheckpoint(eager=False)
     )
     # observed-token contributions: Σ tf·round4(ln(ctc+1)) per (doc, c)
     contrib = (

@@ -54,7 +54,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bigdata_kafka_2_spark.operators.common import ensure_parallel
+from bigdata_kafka_2_spark.operators.common import ensure_parallel, pin, unpin
 from bigdata_kafka_2_spark.operators.text import fingerprint, normalize_text
 
 # Prime for the universal-hash family h_i(x) = (a_i*x + b_i) mod P over
@@ -177,7 +177,7 @@ def ngram_jaccard_pairs(
             .select("shingle")
         )
         sh = sh.join(keep, on="shingle")
-    sh = sh.cache()
+    sh = pin(sh)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
     b = sh.select(F.col(id_col).alias("id_b"), "shingle")
@@ -230,10 +230,10 @@ def prefix_filter_jaccard_pairs(
     Plan: ONE shingle-explosion pass — df-counts as a window over the
     shingle key, then per-doc frequency rank (window partitioned BY
     DOC — thousands of rows per partition, never a global sort) —
-    eagerly checkpointed, then prefix filter → equi-join on prefix
+    pinned, then prefix filter → equi-join on prefix
     shingle with a length filter (J ≥ t ⇒ t·max(L_a,L_b) ≤
     min(L_a,L_b)) → exact verify on per-doc shingle sets collected
-    from the same checkpointed table (``array_intersect`` — the full
+    from the same pinned table (``array_intersect`` — the full
     sets flow only through the small candidate join, never through a
     shingle-keyed shuffle). ``⌈t·L⌉`` is computed as
     ``ceil(t·L − 1e-9)``: when t·L is mathematically integral the
@@ -242,25 +242,18 @@ def prefix_filter_jaccard_pairs(
     """
     from pyspark.sql import Window
 
-    # ONE shingle-explosion pass, pinned (r15). Document frequency
-    # attaches as a window count over the shingle key instead of the
-    # former groupBy + join-back (one exchange, one consumer of the
-    # exploded table instead of two), and the ranked table is EAGERLY
-    # localCheckpoint-ed: it feeds both sides of the candidate
-    # self-join AND the per-doc verify sets, and the .cache() this
-    # plan previously leaned on was evicted under 32-thread
-    # execution-memory pressure in the r14 driver run — the uncached
-    # fallback re-evaluates the shingle explosion per consumer
-    # (26.3 s vs ~2.5 s at sf0.1). With lineage truncated at the
-    # checkpoint the worst case is a disk read of the blocks, never
-    # the re-explosion.
+    # ONE shingle-explosion pass. Document frequency attaches as a
+    # window count over the shingle key instead of a groupBy +
+    # join-back (one exchange, one consumer of the exploded table
+    # instead of two), and the ranked table is pinned: it feeds both
+    # sides of the candidate self-join AND the per-doc verify sets.
     sh = shingles(df, text_col, id_col, k)
     w_df = Window.partitionBy("shingle")
     w_rank = Window.partitionBy(id_col).orderBy(
         F.col("__df").asc(), F.col("shingle").asc()
     )
     w_all = Window.partitionBy(id_col)
-    ranked = (
+    ranked = pin(
         sh.withColumn("__df", F.count(F.lit(1)).over(w_df))
         .select(
             F.col(id_col),
@@ -268,7 +261,6 @@ def prefix_filter_jaccard_pairs(
             F.row_number().over(w_rank).alias("__pos"),
             F.count(F.lit(1)).over(w_all).alias("__n"),
         )
-        .localCheckpoint()
     )
     t = float(threshold)
     prefix_len = (
@@ -291,9 +283,9 @@ def prefix_filter_jaccard_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    # Verify sets from the SAME checkpointed table — the former
+    # Verify sets from the SAME pinned table — the former
     # shingle_sets() subtree re-shingled the corpus once per join
-    # side. The checkpoint is partitioned by the doc id (the rank
+    # side. The pin is partitioned by the doc id (the rank
     # window's exchange), so this aggregate needs no new shuffle;
     # array_intersect is order-insensitive, so the sorted collect
     # equals shingle_sets' row-local array exactly.
@@ -465,7 +457,7 @@ def minhash_lsh_pairs(
     are dropped (set None to keep all candidates).
     """
     rows = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, k, num_hashes, seed).cache()
+    sig = pin(minhash_signatures(df, text_col, id_col, k, num_hashes, seed))
     cand = _lsh_candidates(sig, id_col, bands, rows)
     sa = sig.select(F.col(id_col).alias("id_a"), F.col("minhash").alias("mh_a"))
     sb = sig.select(F.col(id_col).alias("id_b"), F.col("minhash").alias("mh_b"))
@@ -555,8 +547,8 @@ def minhash_lsh_verified_pairs(
     equality on the driver fixtures is asserted in tests, making this
     the oracle-checkable face of the LSH path.
     """
-    # cache: sig feeds BOTH sides of the band self-join
-    sig = minhash_signatures(df, text_col, id_col, k, num_hashes, seed).cache()
+    # pinned: sig feeds BOTH sides of the band self-join
+    sig = pin(minhash_signatures(df, text_col, id_col, k, num_hashes, seed))
     cand = _lsh_candidates(sig, id_col, bands, num_hashes // bands)
     sets = shingle_sets(df, text_col, id_col, k)
     sa = sets.select(
@@ -602,24 +594,26 @@ def dedup_clusters(
     ``pairs``: (id_a, id_b) near-dup edges (any extra columns ignored).
     ``ids``: one row per document id (defines singletons).
     """
-    edges = (
+    if max_iterations < 1:
+        raise ValueError(
+            f"dedup_clusters: max_iterations must be >= 1, got {max_iterations}"
+        )
+    edges = pin(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
             pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         )
         .distinct()
-        .cache()
     )
     # Propagate ONLY over edge-touched nodes: a node with no near-dup
     # edge keeps label == itself by the min-reachable invariant, so the
     # (overwhelmingly dominant at scale) singleton mass never enters the
     # iteration's joins — per-round work is O(|dup subgraph|), not
     # O(|corpus|). Singletons re-enter via one left join at the end.
-    labels = (
+    labels = pin(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=False)
     )
     for it in range(max_iterations):
         neighbor_min = (
@@ -630,12 +624,10 @@ def dedup_clusters(
             .groupBy("src")
             .agg(F.min("label").alias("nbr_label"))
         )
-        # localCheckpoint each round: iterative DataFrame loops otherwise
-        # grow an ever-deeper lineage and replanning dominates runtime.
-        # The convergence flag rides INSIDE the checkpointed frame — the
+        # The convergence flag rides INSIDE the pinned frame — the
         # changed-count is then a cheap scan of materialized partitions,
         # not a third join.
-        new_labels = (
+        new_labels = pin(
             labels.join(
                 neighbor_min.select(F.col("src").alias("node"), "nbr_label"),
                 on="node",
@@ -648,15 +640,13 @@ def dedup_clusters(
                 ).alias("label"),
                 (F.col("nbr_label") < F.col("label")).alias("__changed"),
             )
-            .localCheckpoint(eager=False)
         )
         labels = new_labels.select("node", "label")
         # Convergence is checked every SECOND round (r15): "did the
         # LAST round change any label" is a valid fixpoint test at any
         # cadence (an already-converged round is a no-op on labels), so
         # skipping the odd-round count halves the loop's blocking jobs;
-        # the lazy checkpoints make the skipped round's work ride along
-        # in the next count. Worst case one extra no-op round of joins
+        # the skipped round's pin is materialized by the next count. Worst case one extra no-op round of joins
         # — far cheaper than a count job per round at the scheduler's
         # per-job floor. Labels at exit are identical by the no-op
         # property.
@@ -664,7 +654,7 @@ def dedup_clusters(
             changed = new_labels.filter(F.col("__changed")).count()
             if changed == 0:
                 break
-    edges.unpersist()
+    unpin(edges)
     return ids.select(F.col(id_col).alias("node")).join(
         labels, on="node", how="left"
     ).select(
@@ -959,9 +949,9 @@ def incremental_near_dedup(
     # wall time at the 10× probe scale. In deployment the corpus side
     # IS a stored posting index (written by the previous ingest) and
     # the delta postings are materialized before verification, so the
-    # checkpoint mirrors the production dataflow.
-    sd = sd.localCheckpoint(eager=False)
-    sc = sc.localCheckpoint(eager=False)
+    # pin mirrors the production dataflow.
+    sd = pin(sd)
+    sc = pin(sc)
     others = (
         sc.select(F.col(id_col).alias("other_id"), "shingle")
         .withColumn("is_corpus", F.lit(True))
@@ -1508,7 +1498,7 @@ def shingle_containment_pairs(
             .select("shingle")
         )
         sh = sh.join(keep, on="shingle")
-    sh = sh.cache()
+    sh = pin(sh)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
     b = sh.select(F.col(id_col).alias("id_b"), "shingle")
@@ -1675,14 +1665,10 @@ def weighted_jaccard_pairs(
             .select("tok")
         )
         tf = tf.join(keep, on="tok")
-    # pinned (r15): tf feeds the df-count, the rank join AND the
-    # verify maps; prefix below feeds the expansion probe and both
-    # candidate sides. The caches these previously leaned on are
-    # evictable under execution-memory pressure (the q147 failure
-    # class the r14 driver run exposed); with lineage truncated at a
-    # checkpoint the worst case is a block re-read, never the
-    # re-tokenization.
-    tf = tf.localCheckpoint()
+    # pinned: tf feeds the df-count, the rank join AND the verify
+    # maps; prefix below feeds the expansion probe and both candidate
+    # sides.
+    tf = pin(tf)
     dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("__df"))
     # commonest-first cumulative mass per doc; a token stays in the
     # PREFIX iff its running total (commonest side) reaches t*T
@@ -1703,9 +1689,9 @@ def weighted_jaccard_pairs(
             F.sum("tf").over(w_all).alias("__T"),
         )
     )
-    prefix = ranked.filter(
-        F.col("__cum") >= F.lit(t) * F.col("__T") - F.lit(1e-9)
-    ).localCheckpoint()
+    prefix = pin(
+        ranked.filter(F.col("__cum") >= F.lit(t) * F.col("__T") - F.lit(1e-9))
+    )
     # The self-join below EXPANDS: each token contributes df_p² rows,
     # and AQE sizes the join's partitioning from its (tiny) shuffle
     # INPUT, concentrating the whole expansion into a fixed task
@@ -1713,7 +1699,7 @@ def weighted_jaccard_pairs(
     # row-linear work (the per-task partial-distinct table outgrows
     # memory and the stage spills). Fix with the same guarded-
     # broadcast discipline as pagerank: a bounded scalar job on the
-    # cached prefix measures the exact expansion Σ df_p² and the
+    # pinned prefix measures the exact expansion Σ df_p² and the
     # exact byte size of the build side; while those bytes fit
     # executor memory, hint
     # the build side broadcast (the hash-probe expansion is ~6×

@@ -22,6 +22,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bigdata_kafka_2_spark.operators.common import pin
+
 
 def log2_discounts(k: int) -> list[float]:
     """``[log2(r+1) for rank r in 1..k]`` — the DCG discount ladder as
@@ -736,18 +738,20 @@ def isotonic_binned_calibration(
     from pyspark.sql import Window
 
     w = Window.orderBy("score")
-    ranked = bins.select(
-        "score",
-        "n",
-        "pos",
-        F.row_number().over(w).alias("__i"),
-        F.sum("n").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ).alias("__cn"),
-        F.sum("pos").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ).alias("__cp"),
-    ).localCheckpoint(eager=False)
+    ranked = pin(
+        bins.select(
+            "score",
+            "n",
+            "pos",
+            F.row_number().over(w).alias("__i"),
+            F.sum("n").over(
+                w.rowsBetween(Window.unboundedPreceding, 0)
+            ).alias("__cn"),
+            F.sum("pos").over(
+                w.rowsBetween(Window.unboundedPreceding, 0)
+            ).alias("__cp"),
+        )
+    )
     lo = ranked.select(
         F.col("__i").alias("__a"),
         (F.col("__cn") - F.col("n")).alias("__cna"),

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from bigdata_kafka_2_spark.operators.common import pin
+
 #: decimal scale for rank arithmetic — 12 dp keeps ~9 significant
 #: digits at rank ~1e-3 (1600-node graph) while staying far inside
 #: BIGINT headroom for exact unit sums (mass ≤ 1 → sums ≤ 1e12).
@@ -153,28 +155,28 @@ def pagerank(
     Scale plan, audited stage by stage:
 
     - ``edges`` and the node set (carrying a precomputed dangling
-      flag) are ``localCheckpoint``ed ONCE up front: every iteration
+      flag) are pinned ONCE up front: every iteration
       re-reads them, and each iteration's rank vector is consumed
       twice (contribution join + dangling aggregate) — without
       truncation the lineage re-executes the whole prefix per
       consumer, 2^k plans by iteration k (the dataflow twin of DuckDB
       inlining shared CTEs, which the oracle counters with ``AS
-      MATERIALIZED``). Checkpointing per iteration makes the loop
+      MATERIALIZED``). Pinning per iteration makes the loop
       LINEAR in k: k edge-join passes total.
     - Per iteration: one bounded 1-row dangling-mass collect over the
       flagged rank vector (a scalar, like ``N`` — it doubles as the
-      materialization barrier for the lazily checkpointed vector), one
+      materialization barrier for the pinned vector), one
       rank⋈edges join, one dst-keyed sum with map-side partial
       aggregation, one join back onto the node set. The rank vector is
       |V| rows — orders of magnitude smaller than the edge table — so
       when ``|V| ≤ broadcast_nodes`` BOTH rank-sized sides are
       EXPLICITLY broadcast (rank vector into the edge join, contribs
-      into the node update): the checkpointed edge table then never
+      into the node update): the pinned edge table then never
       re-shuffles and the only exchange per iteration is the |V|-row
       partial-aggregate shuffle. Past the threshold the plan degrades
       gracefully to src/dst-keyed shuffle joins — the Pregel shape —
       which is the correct regime for billion-node graphs.
-    - ``N`` is read once from the checkpointed node set (bounded
+    - ``N`` is read once from the pinned node set (bounded
       driver scalar, same rule as the LSH footer counts).
 
     Contributions ``r(u)·w(u,v)`` are rounded to integer 1e-12 units
@@ -191,7 +193,7 @@ def pagerank(
     vanishingly rare for real-valued weights, and bit-verified
     Spark≡DuckDB on the driver datasets.
     """
-    edges = edges.localCheckpoint(eager=False)
+    edges = pin(edges)
     # the dangling flag rides the node table (r15): the per-iteration
     # left-anti join against srcs (and its broadcast build) becomes a
     # filter over the already-materialized rank vector
@@ -200,13 +202,12 @@ def pagerank(
         .distinct()
         .select(F.col("src").alias("node"), F.lit(True).alias("__o"))
     )
-    nodes = (
+    nodes = pin(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
         .join(srcs_flag, on="node", how="left")
         .select("node", F.col("__o").isNull().alias("__dang"))
-        .localCheckpoint(eager=False)
     )
     n = float(nodes.count())
 
@@ -216,14 +217,9 @@ def pagerank(
         "node", "__dang", F.round(F.lit(1.0 / n), _RANK_SCALE).alias("rank")
     )
     for _ in range(iterations):
-        # Dangling mass as a bounded 1-row scalar (the n=count() rule):
-        # collected FIRST each iteration, it doubles as the
-        # materialization barrier for the lazily checkpointed rank
-        # vector — the first consumer is a serial collect, so the two
-        # downstream broadcast builds read materialized blocks instead
-        # of racing on first-materialization block locks (the r14
-        # failure mode that forced per-iteration EAGER checkpoints,
-        # one dedicated blocking job each).
+        # Dangling mass as a bounded 1-row scalar (the n=count() rule),
+        # collected FIRST: it materializes the pinned rank vector
+        # before the two broadcast builds below read it.
         mu = ranks.filter(F.col("__dang")).agg(
             F.coalesce(
                 F.sum(
@@ -248,7 +244,7 @@ def pagerank(
                 ).alias("__cu")
             )
         )
-        ranks = (
+        ranks = pin(
             nodes.join(bc(contribs), nodes.node == contribs.dst, "left")
             .select(
                 "node",
@@ -268,7 +264,6 @@ def pagerank(
                     _RANK_SCALE,
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=False)
         )
     out = ranks.select("node", "rank")
     if label:
@@ -286,7 +281,7 @@ def pagerank_oracle_sql(
     join + dangling filter), so ``plans.resolve_oracle`` auto-adds
     ``AS MATERIALIZED`` — without which DuckDB's CTE inlining would
     re-evaluate the chain exponentially (the same blowup the Spark
-    side's per-iteration checkpoint prevents)."""
+    side's per-iteration pin prevents)."""
     s = _RANK_SCALE
     u = float(_UNIT)
     d = repr(damping)
@@ -430,32 +425,39 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     u and v each credit the intersection SIZE, each w credits 1
     (explode of true triangles only — output-bounded).
     """
-    # pinned (r15, the q147 lesson): the edge list feeds the degree
-    # aggregate AND the two degree joins; `oriented` feeds the
-    # adjacency broadcast builds AND the per-edge join. These were
-    # .cache() — evictable under execution-memory pressure, with the
-    # upstream basket self-join re-running per consumer as the
-    # fallback; checkpoints bound the worst case at a block re-read.
-    edges = edges.localCheckpoint()
-    deg = (
+    edges = pin(edges)
+    return _pinned_triangle_counts(edges, _degrees(edges))
+
+
+def _degrees(edges: DataFrame) -> DataFrame:
+    """``(node, degree)`` over an undirected edge list ``(a, b)``."""
+    return (
         edges.select(F.col("a").alias("node"))
         .unionAll(edges.select(F.col("b").alias("node")))
         .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("__deg"))
+        .agg(F.count(F.lit(1)).alias("degree"))
     )
+
+
+def _pinned_triangle_counts(edges: DataFrame, deg: DataFrame) -> DataFrame:
+    """:func:`triangle_counts` over a pinned edge list and its
+    :func:`_degrees` table, which :func:`clustering_coefficients`
+    reuses."""
     e = (
         edges.join(deg.withColumnRenamed("node", "a"), "a")
-        .withColumnRenamed("__deg", "__da")
+        .withColumnRenamed("degree", "__da")
         .join(deg.withColumnRenamed("node", "b"), "b")
-        .withColumnRenamed("__deg", "__db")
+        .withColumnRenamed("degree", "__db")
     )
     a_first = (F.col("__da") < F.col("__db")) | (
         (F.col("__da") == F.col("__db")) & (F.col("a") < F.col("b"))
     )
-    oriented = e.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-    ).localCheckpoint()
+    oriented = pin(
+        e.select(
+            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
+        )
+    )
     adj = oriented.groupBy("u").agg(
         F.array_sort(F.collect_list("v")).alias("__nbrs")
     )
@@ -471,7 +473,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     # correct shape for graphs whose adjacency exceeds executor heap.
     from bigdata_kafka_2_spark.operators.dedup import _broadcast_byte_cap
 
-    n_edges = edges.count()  # bounded scalar; also primes the cache
+    n_edges = edges.count()  # bounded scalar; also materializes the pin
     adj_est_bytes = n_edges * 24  # 8 B/element + list/row overhead
     bca = (
         F.broadcast
@@ -553,26 +555,27 @@ def label_propagation(
     transcription (row_number ordered by count DESC, label ASC)
     agrees bit-for-bit. Each round is one src-keyed join + one
     (node, label) map-side-combined count + one struct-max aggregate;
-    the label vector is |V| rows and is ``localCheckpoint``ed per
-    round so the k-round lineage stays LINEAR (the PageRank rule).
+    the label vector is |V| rows and is pinned per round so the
+    k-round lineage stays LINEAR (the PageRank rule).
     Both |V|-row sides (label vector into the edge join, per-node
     argmax into the update) broadcast below 2 M nodes — the
-    checkpointed edge table then never re-shuffles (the q144
+    pinned edge table then never re-shuffles (the q144
     discipline; above the threshold the rounds degrade to the keyed
     Pregel shuffle).
 
     ``edges``: undirected (a, b) distinct; both directions are walked.
     """
-    both = edges.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionAll(
-        edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    ).localCheckpoint(eager=False)
-    labels = (
+    both = pin(
+        edges.select(
+            F.col("a").alias("src"), F.col("b").alias("dst")
+        ).unionAll(
+            edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+        )
+    )
+    labels = pin(
         both.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=False)
     )
     bc = F.broadcast if labels.count() <= 2_000_000 else (lambda d: d)
     for _ in range(iterations):
@@ -593,13 +596,12 @@ def label_propagation(
             )
             .select("node", (-F.col("__m")["__nl"]).alias("__new"))
         )
-        labels = (
+        labels = pin(
             labels.join(bc(best), on="node", how="left")
             .select(
                 "node",
                 F.coalesce(F.col("__new"), F.col("label")).alias("label"),
             )
-            .localCheckpoint(eager=False)
         )
     return labels
 
@@ -625,11 +627,11 @@ def personalized_pagerank(
     one customer segment) where global PageRank answers "central
     overall". Same determinism discipline as :func:`pagerank`
     (integer-unit contribution sums, 12-dp re-rounding, per-iteration
-    ``localCheckpoint``); members of S absent from the graph are
+    pin); members of S absent from the graph are
     ignored (e normalizes over S∩V, matching the oracle's
     membership-within-nodes count).
     """
-    edges = edges.localCheckpoint(eager=False)
+    edges = pin(edges)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
@@ -645,7 +647,7 @@ def personalized_pagerank(
         .distinct()
         .select(F.col("src").alias("node"), F.lit(True).alias("__o"))
     )
-    nodes = (
+    nodes = pin(
         nodes.join(
             members.withColumn("__m", F.lit(True)), on="node", how="left"
         )
@@ -657,7 +659,6 @@ def personalized_pagerank(
             .alias("__e"),
             F.col("__o").isNull().alias("__dang"),
         )
-        .localCheckpoint(eager=False)
     )
     # The rank/node tables are |V|-row: broadcast them into each
     # iteration's joins only while |V| fits executor memory, exactly
@@ -672,8 +673,8 @@ def personalized_pagerank(
         F.round(F.col("__e"), _RANK_SCALE).alias("rank"),
     )
     for _ in range(iterations):
-        # bounded 1-row dangling-mass scalar; also the materialization
-        # barrier for the lazy rank checkpoint (see pagerank)
+        # bounded 1-row dangling-mass scalar, collected first (see
+        # pagerank)
         mu = ranks.filter(F.col("__dang")).agg(
             F.coalesce(
                 F.sum(
@@ -696,7 +697,7 @@ def personalized_pagerank(
                 ).alias("__cu")
             )
         )
-        ranks = (
+        ranks = pin(
             nodes.join(bc(contribs), nodes.node == contribs.dst, "left")
             .select(
                 "node",
@@ -717,7 +718,6 @@ def personalized_pagerank(
                     _RANK_SCALE,
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=False)
         )
     out = ranks.select("node", "rank")
     if label:
@@ -830,17 +830,15 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
     n_triangles, coeff) with ``coeff = triangles / C(degree, 2)``
     (0 for degree < 2) — how close each vertex's neighborhood is to
     a clique; the standard graph-cohesion signal on top of
-    :func:`triangle_counts`. One extra degree aggregate + one
-    equi-join on the (tiny) per-vertex tables; vertices with zero
+    :func:`triangle_counts`. The edge list is pinned once and its
+    degree aggregate feeds both the triangle orientation and the
+    coefficient, so the caller's edge construction runs once; one
+    equi-join on the (tiny) per-vertex tables, and vertices with zero
     triangles still appear (left join from the degree side).
     """
-    deg = (
-        edges.select(F.col("a").alias("node"))
-        .unionAll(edges.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    tri = triangle_counts(edges)
+    edges = pin(edges)
+    deg = _degrees(edges)
+    tri = _pinned_triangle_counts(edges, deg)
     possible = F.col("degree") * (F.col("degree") - 1) / 2
     return (
         deg.join(tri, on="node", how="left")
@@ -883,19 +881,17 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
     per-round driver work is ONE bounded scalar (the survivor
     count, which doubles as the convergence test: node count
     unchanged ⇒ nothing was peeled ⇒ degrees are already the
-    fixpoint). ``localCheckpoint`` per round truncates the
-    iterative lineage (the pagerank/LPA discipline,
-    ``operators/graph.py:136``).
+    fixpoint). A pin per round truncates the iterative lineage (the
+    pagerank/LPA discipline).
     """
-    e = edges.select("a", "b").localCheckpoint(eager=False)
+    e = pin(edges.select("a", "b"))
     prev = None
     for _ in range(int(max_rounds)):
-        deg = (
+        deg = pin(
             e.select(F.col("a").alias("node"))
             .unionAll(e.select(F.col("b").alias("node")))
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("deg"))
-            .localCheckpoint(eager=False)
         )
         surv = deg.filter(F.col("deg") >= int(k))
         n_nodes = surv.count()
@@ -905,14 +901,13 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
             )
         prev = n_nodes
         s = surv.select("node")
-        e = (
+        e = pin(
             e.join(
                 s.withColumnRenamed("node", "a"), on="a", how="left_semi"
             )
             .join(
                 s.withColumnRenamed("node", "b"), on="b", how="left_semi"
             )
-            .localCheckpoint(eager=False)
         )
     raise RuntimeError(
         f"kcore(k={k}) did not converge within {max_rounds} rounds"
@@ -960,18 +955,16 @@ def adamic_adar_links(
     ``auto_cap_expansion=None`` to force exactness at any volume.
 
     MATERIALIZATION (r12 verdict finding #1): the edge list is
-    ``localCheckpoint()``-ed once at entry — the q144/q236/q163
-    sibling discipline — because every downstream consumer (the two
-    degree-union scans, the two neighbor-union scans, the wedge
-    self-join, the left-anti join, and the bounded measure jobs)
-    rescans it; callers pass CONSTRUCTED edge tables (q228 builds a
-    co-occurrence join upstream) and a cache released before the
-    returned plan executes recomputes that construction 4+ times.
-    Checkpoint blocks are bounded by the edge list itself (never the
-    wedge volume); on a real cluster swap ``localCheckpoint`` for a
-    reliable ``checkpoint`` dir to survive executor loss.
+    pinned once at entry — the q144/q236/q163 sibling discipline —
+    because every downstream consumer (the two degree-union scans,
+    the two neighbor-union scans, the wedge self-join, the left-anti
+    join, and the bounded measure jobs) rescans it; callers pass
+    CONSTRUCTED edge tables (q228 builds a co-occurrence join
+    upstream), which would otherwise be recomputed 4+ times. Pinned
+    blocks are bounded by the edge list itself (never the wedge
+    volume).
     """
-    e = edges.select("a", "b").localCheckpoint(eager=False)
+    e = pin(edges.select("a", "b"))
     deg = (
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))
@@ -1109,20 +1102,19 @@ def hits(
     stay bit-identical at every round. Plan shape per round: two keyed joins (src, dst)
     with map-side-combined unit sums, both rank-sized sides
     broadcast below ``broadcast_nodes`` (above it the plan degrades
-    to the Pregel shuffle shape); per-round ``localCheckpoint``
-    keeps the 2k-join lineage linear. Nodes with no in-edges hold
+    to the Pregel shuffle shape); a pin per round keeps the 2k-join
+    lineage linear. Nodes with no in-edges hold
     authority 0, no out-edges hub 0 — both stay in the output.
     """
     if iterations < 1:
         raise ValueError(
             f"hits: iterations must be >= 1, got {iterations}"
         )
-    edges = edges.select("src", "dst").distinct().localCheckpoint(eager=False)
-    nodes = (
+    edges = pin(edges.select("src", "dst").distinct())
+    nodes = pin(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     n = nodes.count()
     bc = F.broadcast if n <= broadcast_nodes else (lambda df: df)
@@ -1144,10 +1136,8 @@ def hits(
         # L1 total as a bounded 1-row DECIMAL(38,0) scalar, embedded
         # back as an exact decimal literal (bit-identical to the
         # former crossJoin(broadcast(1-row agg)) route). Collecting it
-        # FIRST also materializes the lazily checkpointed unit-sum
-        # table, so the downstream broadcast build reads blocks — the
-        # r15 barrier pattern that retires one eager-checkpoint job
-        # and two broadcast-exchange jobs per half-round.
+        # FIRST also materializes the pinned unit-sum table, so the
+        # downstream broadcast build reads blocks.
         v = raw.agg(F.sum(F.col(col).cast(dec)).alias("__t")).collect()[0][
             "__t"
         ]
@@ -1160,14 +1150,13 @@ def hits(
     )
     auth = None
     for _ in range(iterations):
-        raw_a = (
+        raw_a = pin(
             edges.join(bc(hub), edges.src == hub.node)
             .groupBy("dst")
             .agg(F.sum(units("h")).alias("__au"))
-            .localCheckpoint(eager=False)
         )
         ta = _tot_lit(raw_a, "__au")
-        auth = (
+        auth = pin(
             nodes.join(bc(raw_a), nodes.node == raw_a.dst, "left")
             .select(
                 "node",
@@ -1177,16 +1166,14 @@ def hits(
                     _RANK_SCALE,
                 ).alias("a"),
             )
-            .localCheckpoint(eager=False)
         )
-        raw_h = (
+        raw_h = pin(
             edges.join(bc(auth), edges.dst == auth.node)
             .groupBy("src")
             .agg(F.sum(units("a")).alias("__hu"))
-            .localCheckpoint(eager=False)
         )
         th = _tot_lit(raw_h, "__hu")
-        hub = (
+        hub = pin(
             nodes.join(bc(raw_h), nodes.node == raw_h.src, "left")
             .select(
                 "node",
@@ -1196,7 +1183,6 @@ def hits(
                     _RANK_SCALE,
                 ).alias("h"),
             )
-            .localCheckpoint(eager=False)
         )
     out = auth.join(hub, on="node").select(
         "node",
@@ -1296,8 +1282,8 @@ def khop_reachability(
     Fixed-iteration frontier expansion (the LPA/k-core loop
     discipline): each hop is ONE equi-join of the current frontier
     against the symmetric neighbor table plus a left-anti join
-    against the visited set; frontier and visited are
-    ``localCheckpoint``ed per hop so the k-hop lineage stays linear.
+    against the visited set; frontier and visited are pinned per hop
+    so the k-hop lineage stays linear.
 
     r12 plan tightening, values unchanged: the frontier and visited
     frames are node-sized and their EXACT counts are already known
@@ -1311,15 +1297,13 @@ def khop_reachability(
     a running Python sum.
     """
     broadcast_nodes = 2_000_000
-    sym = (
+    sym = pin(
         edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .unionAll(edges.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .localCheckpoint(eager=False)
     )
-    frontier = (
+    frontier = pin(
         seeds.select(F.col(seeds.columns[0]).alias("node"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     visited = frontier
     n_frontier = frontier.count()
@@ -1330,16 +1314,15 @@ def khop_reachability(
             F.broadcast if n_frontier <= broadcast_nodes else (lambda d: d)
         )
         bc_v = F.broadcast if reached <= broadcast_nodes else (lambda d: d)
-        nxt = (
+        nxt = pin(
             sym.join(
                 bc_f(frontier.withColumnRenamed("node", "u")), on="u"
             )
             .select(F.col("v").alias("node"))
             .distinct()
             .join(bc_v(visited), on="node", how="left_anti")
-            .localCheckpoint(eager=False)
         )
-        visited = visited.unionAll(nxt).localCheckpoint(eager=False)
+        visited = pin(visited.unionAll(nxt))
         frontier = nxt
         n_frontier = nxt.count()
         reached += n_frontier

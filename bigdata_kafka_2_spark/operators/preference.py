@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdata_kafka_2_spark.operators.common import pin
+
 #: 12-dp strength arithmetic — same scale as the PageRank/HITS
 #: induction (operators/graph._RANK_SCALE).
 _SCALE = 12
@@ -92,7 +94,7 @@ def bradley_terry(
     Scale plan — the Pregel shape shared with
     :func:`~bigdata_kafka_2_spark.operators.graph.pagerank`: the
     symmetric match table (2 rows per pair) is the edge list,
-    checkpointed once; per round ONE edge⋈strength join per side
+    pinned once; per round ONE edge⋈strength join per side
     (strength vector broadcast below ``broadcast_players``, shuffle
     join above), one i-keyed aggregate, one broadcast 1-row
     normalization total. Iterations are FIXED and unrolled — the
@@ -117,7 +119,7 @@ def bradley_terry(
             f"bradley_terry: iterations must be >= 1, got {iterations}"
         )
     n_tot = (F.col("wins_a") + F.col("wins_b")).alias("n")
-    sym = (
+    sym = pin(
         matches.select(
             F.col("a").alias("i"), F.col("b").alias("j"), n_tot
         )
@@ -126,9 +128,8 @@ def bradley_terry(
                 F.col("b").alias("i"), F.col("a").alias("j"), n_tot
             )
         )
-        .localCheckpoint(eager=False)
     )
-    wins = (
+    wins = pin(
         matches.select(F.col("a").alias("i"), F.col("wins_a").alias("__w"))
         .unionAll(
             matches.select(
@@ -137,7 +138,6 @@ def bradley_terry(
         )
         .groupBy("i")
         .agg(F.sum("__w").alias("__W"))
-        .localCheckpoint(eager=False)
     )
     zero = wins.filter(F.col("__W") <= 0).count()
     if zero:
@@ -181,7 +181,7 @@ def bradley_terry(
         tot = raw.agg(
             F.sum(F.col("__r").cast(_DEC)).alias("__s")
         )
-        w = (
+        w = pin(
             raw.crossJoin(F.broadcast(tot))
             .select(
                 "i",
@@ -189,7 +189,6 @@ def bradley_terry(
                     F.col("__r") / F.col("__s").cast("double"), _SCALE
                 ).alias("w"),
             )
-            .localCheckpoint(eager=False)
         )
     return w.select(F.col("i").alias("player"), F.col("w").alias("strength"))
 
@@ -343,12 +342,14 @@ def preference_cycles(matches: DataFrame) -> DataFrame:
     degenerate path every sibling statistic uses).
     """
     won_a = F.col("wins_a") > F.col("wins_b")
-    oriented = matches.filter(
-        F.col("wins_a") != F.col("wins_b")
-    ).select(
-        F.when(won_a, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(won_a, F.col("b")).otherwise(F.col("a")).alias("v"),
-    ).localCheckpoint(eager=False)
+    oriented = pin(
+        matches.filter(
+            F.col("wins_a") != F.col("wins_b")
+        ).select(
+            F.when(won_a, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(won_a, F.col("b")).otherwise(F.col("a")).alias("v"),
+        )
+    )
     players = (
         matches.select(F.col("a").alias("p"))
         .unionAll(matches.select(F.col("b").alias("p")))

@@ -14,6 +14,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdata_kafka_2_spark.operators.common import pin
+
 
 def profile_table(
     df: DataFrame, columns: Sequence[str], exact: bool = True
@@ -2168,10 +2170,12 @@ def eb_shrunk_rates(
         if isinstance(success_col, str)
         else success_col
     ).cast("long")
-    g = df.groupBy(*list(group_cols)).agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.sum(s).alias("__x"),
-    ).localCheckpoint(eager=False)
+    g = pin(
+        df.groupBy(*list(group_cols)).agg(
+            F.count(F.lit(1)).alias("__n"),
+            F.sum(s).alias("__x"),
+        )
+    )
     rate = F.round(
         F.col("__x").cast("double") / F.col("__n").cast("double"), 9
     )
@@ -2379,7 +2383,7 @@ def hill_tail_index(
 
     Plan: the top k+1 values arrive by ``TakeOrderedAndProject``
     (per-partition heaps of k+1 — never a global sort), are
-    checkpointed as a bounded frame, and the pivot ``x_(k+1)`` is
+    pinned as a bounded frame, and the pivot ``x_(k+1)`` is
     ONE bounded driver scalar (the pagerank node-count pattern —
     also sidestepping the Spark 4 crossJoin-with-own-aggregate
     ambiguity); per-order-statistic terms ``round(ln(x_i) −
@@ -2392,12 +2396,11 @@ def hill_tail_index(
     set with zero tail spread, returns NULL alpha (the estimator is
     undefined; the honest answer, not a division by zero).
     """
-    vals = (
+    vals = pin(
         df.select(F.col(value_col).cast("double").alias("__x"))
         .filter(F.col("__x") > 0)
         .orderBy(F.col("__x").desc())
         .limit(int(k) + 1)
-        .localCheckpoint(eager=False)
     )
     got = vals.count()
     spark = df.sparkSession
@@ -2914,9 +2917,11 @@ def kruskal_wallis(
     # (group, value) counts feed the value table, the rank join, and
     # through vt the prefix-sum's bounds + offset jobs — materialize
     # once so the fact is scanned exactly once (see spearman_corr).
-    gv = df.groupBy(g.alias("__g"), v.alias("__v")).agg(
-        F.count(F.lit(1)).alias("__cjv")
-    ).localCheckpoint(eager=False)
+    gv = pin(
+        df.groupBy(g.alias("__g"), v.alias("__v")).agg(
+            F.count(F.lit(1)).alias("__cjv")
+        )
+    )
     vt = gv.groupBy("__v").agg(F.sum("__cjv").alias("__c"))
     dec = "decimal(38,0)"
     pre = global_prefix_sum(vt, "__v", "__c", "__before", sum_type=dec)
@@ -3105,9 +3110,11 @@ def groupwise_ks_fdr(
     # the total — materialize once so the fact is scanned exactly
     # once (see spearman_corr); N also derives from it, replacing a
     # second full-fact aggregate.
-    gv = df.groupBy(g.alias("__g"), v.alias("__v")).agg(
-        F.count(F.lit(1)).alias("__cgv")
-    ).localCheckpoint(eager=False)
+    gv = pin(
+        df.groupBy(g.alias("__g"), v.alias("__v")).agg(
+            F.count(F.lit(1)).alias("__cgv")
+        )
+    )
     vt = gv.groupBy("__v").agg(F.sum("__cgv").alias("__cv"))
     n_vals = vt.count()
     if n_vals > int(max_values):
@@ -3224,7 +3231,7 @@ def spearman_corr(
 
     ALL-INTEGER rank construction, attached IN PLACE (r14 plan): the
     FACT table reduces to one map-side-combined (x, y) pair-count
-    table first (scanned once, localCheckpointed — the q228
+    table first (scanned once, pinned — the q228
     precedent), then each variable's DOUBLED mid-rank ``2·C_v + c_v
     + 1`` rides the pair table itself through ONE value-aligned
     range-bucketed shuffle per variable: a RANGE-frame window pair
@@ -3236,7 +3243,8 @@ def spearman_corr(
     pair table against each (six exchanges); this one is two
     shuffles and an aggregate. Both variables' bucket bounds come
     from a single multi-column approxQuantile pass, so the whole
-    operator is exactly three jobs: checkpoint, sketch, aggregate.
+    operator is the sketch job (which materializes the pin) and the
+    aggregate.
     Window running counts are LONG (bounded by the row count, which
     physically fits a long); every Pearson moment — Σc·(2r_x),
     Σc·(2r_x)², Σc·(2r_x)(2r_y) — accumulates as exact DECIMAL(38,0)
@@ -3253,10 +3261,12 @@ def spearman_corr(
     )
 
     dec = "decimal(38,0)"
-    pairs = df.groupBy(
-        F.col(x_col).cast("double").alias("__x"),
-        F.col(y_col).cast("double").alias("__y"),
-    ).agg(F.count(F.lit(1)).alias("__cp")).localCheckpoint(eager=False)
+    pairs = pin(
+        df.groupBy(
+            F.col(x_col).cast("double").alias("__x"),
+            F.col(y_col).cast("double").alias("__y"),
+        ).agg(F.count(F.lit(1)).alias("__cp"))
+    )
 
     nb = min(_shuffle_partitions(pairs), 64)
     bx, by = pairs.stat.approxQuantile(
@@ -3456,7 +3466,7 @@ def trimmed_winsorized_mean(
         .groupBy(cents.alias("__v"))
         .agg(F.count(F.lit(1)).alias("__c"))
     )
-    pre = global_prefix_sum(g, "__v", "__c", "__b").localCheckpoint(eager=False)
+    pre = pin(global_prefix_sum(g, "__v", "__c", "__b"))
     tot = pre.agg(F.sum("__c").alias("__n"))
     j = pre.crossJoin(F.broadcast(tot))
     k = F.floor(F.lit(float(alpha)) * F.col("__n")).cast("long")
@@ -3755,10 +3765,9 @@ def kendall_tau_b(
     x = F.col(x_col)
     y = F.col(y_col)
     rows = df.filter(x.isNotNull() & y.isNotNull())
-    cells = (
+    cells = pin(
         rows.groupBy(x.alias("__x"), y.alias("__y"))
         .agg(F.count(F.lit(1)).alias("__c"))
-        .localCheckpoint(eager=False)
     )
     dec = "decimal(38,0)"
     a = cells.select(

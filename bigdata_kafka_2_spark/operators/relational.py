@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from bigdata_kafka_2_spark.functions import contains_term
+from bigdata_kafka_2_spark.operators.common import pin
 
 
 # --- Filters / projections (P1, P6, P7) ---------------------------------
@@ -748,12 +749,9 @@ def skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     """
     pts = df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
     # g (the per-distinct-x maxima) is consumed by the quantile
-    # sketch AND the frontier job — eagerly pinned (r15): the
-    # unmaterialized form re-ran the aggregate over pts once per
-    # consumer, and the former driver-side bucket-maxima collect sat
-    # a third evaluation on the job queue (the r14 driver record's
-    # 6.3 s / anti-scaling signature). |distinct x| rows only.
-    g = pts.groupBy(x_col).agg(F.max(y_col).alias("__ymax")).localCheckpoint()
+    # sketch AND the frontier job — pinned, so the aggregate over pts
+    # runs once. |distinct x| rows only.
+    g = pin(pts.groupBy(x_col).agg(F.max(y_col).alias("__ymax")))
     n_buckets = _shuffle_partitions(g)
     bucketed, eff = _range_bucket(g, x_col, min(n_buckets, 64))
     # max of __ymax over all HIGHER buckets (x strictly greater

@@ -16,6 +16,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdata_kafka_2_spark.operators.common import pin
+
 _BUCKETS = 1_000_000
 
 
@@ -824,12 +826,11 @@ def ipf_raking(
             f"ipf_raking: iterations must be >= 1, got {iterations}"
         )
     dec = "decimal(38,12)"
-    cells = (
+    cells = pin(
         df.groupBy(
             F.col(row_col).alias("__r"), F.col(col_col).alias("__c")
         )
         .agg(F.count(F.lit(1)).alias("__n"))
-        .localCheckpoint(eager=False)
     )
     # bounded driver scalars off the |cells|-row table (the pagerank
     # node-count pattern): grand total and marginal cardinalities fix
@@ -861,14 +862,16 @@ def ipf_raking(
         cs = w.groupBy("__c").agg(
             F.sum(F.col("__w").cast(dec)).alias("__cs")
         )
-        w = w.join(F.broadcast(cs), on="__c").select(
-            "__r", "__c", "__n",
-            F.round(
-                F.col("__w")
-                * (F.lit(t_col) / F.col("__cs").cast("double")),
-                _IPF_SCALE,
-            ).alias("__w"),
-        ).localCheckpoint(eager=False)
+        w = pin(
+            w.join(F.broadcast(cs), on="__c").select(
+                "__r", "__c", "__n",
+                F.round(
+                    F.col("__w")
+                    * (F.lit(t_col) / F.col("__cs").cast("double")),
+                    _IPF_SCALE,
+                ).alias("__w"),
+            )
+        )
     return w.select(
         F.col("__r").alias(row_col),
         F.col("__c").alias(col_col),

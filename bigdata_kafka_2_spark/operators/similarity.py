@@ -39,6 +39,7 @@ def _with_norm(df: DataFrame, vec_col: str, out: str) -> DataFrame:
 
 
 from bigdata_kafka_2_spark.operators.common import ensure_parallel as _ensure_parallel
+from bigdata_kafka_2_spark.operators.common import pin
 
 
 def _pair_sim(vec_a, vec_b, norm_a, norm_b):
@@ -701,15 +702,15 @@ def semantic_dedup_pairs(
     else:
         assigned = assign_centroids(table, centroids, vec_col, id_col)
     # Materialize the assignment ONCE before the self-join: both pair
-    # sides reference it, and without the checkpoint Spark recomputes
+    # sides reference it, and without the pin Spark recomputes
     # the whole argmax aggregate per side — measured as ~80% of q75's
     # wall time at the 10× probe scale (the pair stage itself is
     # linear in Σ|cluster|²). SemDeDup deployments write the cluster
     # assignment to storage at exactly this boundary anyway (it IS the
     # IVF layout q57/ann_index_write partition by), so the
     # materialization is the production behavior, not a test artifact
-    # — same stage-boundary rule as q66/q81's curated-set checkpoint.
-    assigned = assigned.localCheckpoint(eager=False)
+    # — same stage-boundary rule as q66/q81's curated-set pin.
+    assigned = pin(assigned)
     t = _with_norm(assigned, vec_col, "__n")
     a = t.select(
         "centroid_id",
@@ -1219,7 +1220,7 @@ def pq_adc_topk(
     """Encode-then-search convenience: :func:`pq_encode` materialized
     in-session, then :func:`pq_adc_search`.
 
-    The localCheckpoint stands in for :func:`pq_index_write`'s parquet
+    The pin stands in for :func:`pq_index_write`'s parquet
     round-trip in single-session pipelines (graded q48/q68): it severs
     the lineage so Catalyst doesn't inline the 8 argmin expression
     trees (~10^4 nodes each) into every code_m reference of the LUT
@@ -1227,10 +1228,12 @@ def pq_adc_topk(
     milliseconds to seconds of driver time. The index-as-a-file
     deployment path is tested separately via write/read/search.
     """
-    codes = pq_encode(
-        table, n_sub, n_cent, dim, seed, vec_col, id_col, books=books,
-        with_error=False,
-    ).localCheckpoint(eager=False)
+    codes = pin(
+        pq_encode(
+            table, n_sub, n_cent, dim, seed, vec_col, id_col, books=books,
+            with_error=False,
+        )
+    )
     return pq_adc_search(
         codes, probe, k, n_sub, n_cent, dim, seed, vec_col, id_col, books=books
     )
@@ -1610,9 +1613,10 @@ def ann_index_compact(spark, path: str, id_col: str = "vec_id") -> dict:
         survivors = index.filter(
             F.col("centroid_id").isin(touched)
         ).join(F.broadcast(tomb), on=id_col, how="left_anti")
-        # localCheckpoint: the survivor frame READS the partitions the
-        # overwrite is about to replace — materialize first.
-        survivors = survivors.localCheckpoint(eager=False)
+        # pinned: the survivor frame READS the partitions the
+        # overwrite is about to replace; the collect below
+        # materializes it first.
+        survivors = pin(survivors)
         kept = {
             r["centroid_id"]
             for r in survivors.select("centroid_id").distinct().collect()

@@ -15,7 +15,7 @@ import pandas as pd  # module-level: pandas_udf type hints (stringified
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bigdata_kafka_2_spark.operators.common import ensure_parallel
+from bigdata_kafka_2_spark.operators.common import ensure_parallel, pin
 
 #: Tiny per-language stopword marker sets for the n-gram language-ID
 #: heuristic. Deterministic and dependency-free; a real pipeline would
@@ -803,7 +803,7 @@ def winnow_overlap_pairs(
     signature instead of every shingle — the cheap screen for copied
     passages that whole-document Jaccard dilutes away.
 
-    The signature table is ``localCheckpoint``-ed (lazily) before the
+    The signature table is pinned before the
     explode: the optimizer inlines the fingerprint expression chain
     into the generator and both join sides — the zip_with/hash tree
     replicates 60× in the optimized plan (measured 23× slower per
@@ -811,9 +811,7 @@ def winnow_overlap_pairs(
     pipeline materializes once and reuses anyway (the q105 stage-
     boundary precedent).
     """
-    fps = winnow_fingerprints(
-        df, text_col, id_col, k, window, hash_fn
-    ).localCheckpoint(eager=False)
+    fps = pin(winnow_fingerprints(df, text_col, id_col, k, window, hash_fn))
     ex = fps.select(F.col(id_col), F.explode("fingerprints").alias("fp"))
     a = ex.select(F.col(id_col).alias("id_a"), "fp")
     b = ex.select(F.col(id_col).alias("id_b"), "fp")
@@ -985,15 +983,13 @@ def pmi_top_pairs(
     # re-exploded the corpus five times (uc + bc + both totals + the
     # rescan per self-reference), measured ~3× slower at the 10×
     # probe scale.
-    uc = (
+    uc = pin(
         unigrams.groupBy("w")
         .agg(F.count(F.lit(1)).alias("n_w"))
-        .localCheckpoint(eager=False)
     )
-    bc0 = (
+    bc0 = pin(
         bigrams.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("n_pair"))
-        .localCheckpoint(eager=False)
     )
     bc = bc0.filter(F.col("n_pair") >= min_count)
     totals = F.broadcast(
@@ -1320,11 +1316,13 @@ def more_like_this(
     """
     w = tfidf_scores(df, text_col, id_col)
     dec = "decimal(18,4)"
-    wd = w.select(
-        F.col(id_col),
-        "tok",
-        F.col("tfidf").cast(dec).alias("__w"),
-    ).cache()
+    wd = pin(
+        w.select(
+            F.col(id_col),
+            "tok",
+            F.col("tfidf").cast(dec).alias("__w"),
+        )
+    )
     probe = F.broadcast(
         wd.filter(F.col(id_col) == probe_id).select(
             "tok", F.col("__w").alias("__wp")
@@ -1452,7 +1450,7 @@ def token_kl_drift(
     totals reduce from it on the same key; group totals and the
     1-row N ride in as window-free rollups of the same cells.
     """
-    cells = (
+    cells = pin(
         df.select(
             F.col(group_col).alias("__g"),
             F.explode(F.split(normalize_text(text_col), " ")).alias("tok"),
@@ -1460,7 +1458,6 @@ def token_kl_drift(
         .filter(F.col("tok") != "")
         .groupBy("__g", "tok")
         .agg(F.count(F.lit(1)).alias("__c"))
-        .localCheckpoint(eager=False)
     )
     gtot = cells.groupBy("__g").agg(F.sum("__c").alias("__T"))
     vtot = cells.groupBy("tok").agg(F.sum("__c").alias("__cv"))

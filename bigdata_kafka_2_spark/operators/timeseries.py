@@ -14,6 +14,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bigdata_kafka_2_spark.operators.common import pin
+
 
 def resample_ffill(
     events: DataFrame,
@@ -1088,11 +1090,9 @@ def kaplan_meier(
             (F.lit(1) - F.col(event_col).cast("long"))
         ).alias("n_censored"),
     )
-    # one subjects scan (the nelson_aalen shape): checkpoint the
-    # |T|-row cell table; the subject total is Σ __rem over it
-    g = g.withColumn(
-        "__rem", F.col("n_events") + F.col("n_censored")
-    ).localCheckpoint(eager=False)
+    # one subjects scan (the nelson_aalen shape): pin the |T|-row
+    # cell table; the subject total is Σ __rem over it
+    g = pin(g.withColumn("__rem", F.col("n_events") + F.col("n_censored")))
     tot = g.agg(F.sum("__rem").alias("__N"))
     # subjects removed (event or censor) strictly before t
     risk = global_prefix_sum(
@@ -1314,21 +1314,23 @@ def nelson_aalen(
         global_prefix_sum,
     )
 
-    # one subjects scan: the |T|-row cell table is checkpointed and
+    # one subjects scan: the |T|-row cell table is pinned and
     # the subject total is Σ __rem over it (≡ count(subjects)), so
     # the quantile sketch, the total, and both downstream prefix
     # passes all read the reduced table instead of re-running the
     # caller's duration pipeline per consumer (the q228 precedent).
-    g = subjects.groupBy(
-        F.col(duration_col).cast("long").alias("t")
-    ).agg(
-        F.sum(F.col(event_col).cast("long")).alias("n_events"),
-        F.sum(
-            (F.lit(1) - F.col(event_col).cast("long"))
-        ).alias("n_censored"),
-    ).withColumn(
-        "__rem", F.col("n_events") + F.col("n_censored")
-    ).localCheckpoint(eager=False)
+    g = pin(
+        subjects.groupBy(
+            F.col(duration_col).cast("long").alias("t")
+        ).agg(
+            F.sum(F.col(event_col).cast("long")).alias("n_events"),
+            F.sum(
+                (F.lit(1) - F.col(event_col).cast("long"))
+            ).alias("n_censored"),
+        ).withColumn(
+            "__rem", F.col("n_events") + F.col("n_censored")
+        )
+    )
     tot = g.agg(F.sum("__rem").alias("__N"))
     risk = global_prefix_sum(
         g,
@@ -1430,14 +1432,16 @@ def logrank_test(
         else group_col.cast("boolean")
     )
     e = F.col(event_col).cast("long")
-    g = subjects.groupBy(
-        F.col(duration_col).cast("long").alias("t")
-    ).agg(
-        F.sum(e).alias("__d"),
-        F.sum(F.when(gflag, e).otherwise(F.lit(0))).alias("__d1"),
-        F.count(F.lit(1)).alias("__rem"),
-        F.sum(F.when(gflag, 1).otherwise(0)).alias("__rem1"),
-    ).localCheckpoint(eager=False)
+    g = pin(
+        subjects.groupBy(
+            F.col(duration_col).cast("long").alias("t")
+        ).agg(
+            F.sum(e).alias("__d"),
+            F.sum(F.when(gflag, e).otherwise(F.lit(0))).alias("__d1"),
+            F.count(F.lit(1)).alias("__rem"),
+            F.sum(F.when(gflag, 1).otherwise(0)).alias("__rem1"),
+        )
+    )
     # subject totals as bounded driver scalars off the |T|-row cell
     # table (the pagerank node-count pattern; a crossJoin with an
     # aggregate of the same frame trips Spark 4 self-join ambiguity)
@@ -1531,13 +1535,15 @@ def competing_risks_cif(
     )
 
     e = F.col(event_col).cast("int")
-    g = subjects.groupBy(
-        F.col(duration_col).cast("long").alias("t")
-    ).agg(
-        F.sum(F.when(e == 1, 1).otherwise(0)).alias("__d1"),
-        F.sum(F.when(e == 2, 1).otherwise(0)).alias("__d2"),
-        F.count(F.lit(1)).alias("__rem"),
-    ).localCheckpoint(eager=False)
+    g = pin(
+        subjects.groupBy(
+            F.col(duration_col).cast("long").alias("t")
+        ).agg(
+            F.sum(F.when(e == 1, 1).otherwise(0)).alias("__d1"),
+            F.sum(F.when(e == 2, 1).otherwise(0)).alias("__d2"),
+            F.count(F.lit(1)).alias("__rem"),
+        )
+    )
     n_total = int(
         g.agg(F.sum("__rem").alias("__N")).collect()[0]["__N"]
     )
@@ -1724,9 +1730,7 @@ def runs_test(
             (F.col("__v") > F.col("__med")).alias("__up"),
         )
     )
-    ranked = global_row_number(
-        signed, ["__ts", "__id"], "__rn"
-    ).localCheckpoint()
+    ranked = pin(global_row_number(signed, ["__ts", "__id"], "__rn"))
     pairs = ranked.select(
         (F.col("__rn") + 1).alias("__rnk"),
         F.col("__up").alias("__ua"),

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from bigdata_kafka_2_spark.io import read_table
 from bigdata_kafka_2_spark.operators import dedup as DD
+from bigdata_kafka_2_spark.operators.common import pin
 from bigdata_kafka_2_spark.plans import REGISTRY, register
 
 _NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
@@ -142,7 +143,7 @@ def q42_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     description="End-to-end near-deduplication: MinHash-LSH candidates "
     "→ exact-Jaccard verify (≥ 0.5) → connected components "
-    "(iterative min-label propagation, lineage-checkpointed) "
+    "(iterative min-label propagation, pinned per round) "
     "→ keep the min-id representative per cluster. "
     "Hash-checked against a recursive-CTE transitive-closure "
     "oracle over the exact pair graph.",
@@ -560,13 +561,7 @@ def q81_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     kept2 = kept1.join(k2, on="doc_id", how="left_semi")
-    kept3 = DD.decontaminate(kept2, ev, k=4, min_shared=1)
-    # The curated set feeds every stage of the dedup+CC+split tail,
-    # each of which runs multiple jobs — materialize it once instead
-    # of re-executing the quality→repetition→decontamination lineage
-    # per job (measured ~3× on the bench; at deployment scale this is
-    # the stage boundary where the curated subset is WRITTEN anyway).
-    kept3 = kept3.localCheckpoint()
+    kept3 = pin(DD.decontaminate(kept2, ev, k=4, min_shared=1))
     labeled = leakage_safe_split(
         kept3,
         {"train": 0.8, "val": 0.1, "test": 0.1},
@@ -932,7 +927,7 @@ _Q110_ORACLE = (
     "operators/dedup.exact_substring_dedup) → verified near-dedup "
     "pairs + connected components → leakage-safe splits → per-split "
     "profile. Every stage scan-speed, broadcast-bounded, or "
-    "dup-subgraph-bounded; the curated set is checkpointed once at "
+    "dup-subgraph-bounded; the curated set is pinned once at "
     "the stage boundary deployment writes anyway (q81's rule). All "
     "stages non-vacuous on the driver data (each drops documents).",
     tags=("dedup", "sampling", "text", "flagship"),
@@ -955,19 +950,9 @@ def q110_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     kept2 = kept1.join(k2, on="doc_id", how="left_semi")
-    # Each downstream stage references its input several times
-    # (signatures + shingle sets + the anti join), so every curated
-    # intermediate is materialized once at its stage boundary — the
-    # q81 rule applied per stage (deployment writes each curated
-    # subset anyway; without the checkpoints the quality→…→decontam
-    # lineage re-executes per reference).
-    kept3 = DD.decontaminate(kept2, ev, k=4, min_shared=1).localCheckpoint()
-    kept4 = DD.fuzzy_decontaminate(
-        kept3, ev, k=3, threshold=0.3
-    ).localCheckpoint()
-    kept5 = DD.exact_substring_dedup(
-        kept4, k=4, min_df=2, max_coverage=0.5
-    ).localCheckpoint()
+    kept3 = pin(DD.decontaminate(kept2, ev, k=4, min_shared=1))
+    kept4 = pin(DD.fuzzy_decontaminate(kept3, ev, k=3, threshold=0.3))
+    kept5 = pin(DD.exact_substring_dedup(kept4, k=4, min_df=2, max_coverage=0.5))
     labeled = leakage_safe_split(
         kept5,
         {"train": 0.8, "val": 0.1, "test": 0.1},
@@ -1118,7 +1103,7 @@ def _q127_oracle(sf_dir: str | None = None) -> str:
     "row — no global sort) → verified near-dedup pairs + connected "
     "components → leakage-safe splits → per-split profile. One "
     "hash-checked plan; every stage scan-speed, broadcast-bounded, "
-    "or dup-subgraph-bounded; curated intermediates checkpointed at "
+    "or dup-subgraph-bounded; curated intermediates pinned at "
     "the stage boundaries deployment writes anyway (q81's rule).",
     tags=("dedup", "sampling", "text", "flagship"),
 )
@@ -1143,25 +1128,20 @@ def q127_curation_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     kept2 = kept1.join(k2, on="doc_id", how="left_semi")
-    kept3 = DD.decontaminate(kept2, ev, k=4, min_shared=1).localCheckpoint()
-    kept4 = DD.fuzzy_decontaminate(
-        kept3, ev, k=3, threshold=0.3
-    ).localCheckpoint()
-    kept5 = DD.exact_substring_dedup(
-        kept4, k=4, min_df=2, max_coverage=0.5
-    ).localCheckpoint()
+    kept3 = pin(DD.decontaminate(kept2, ev, k=4, min_shared=1))
+    kept4 = pin(DD.fuzzy_decontaminate(kept3, ev, k=3, threshold=0.3))
+    kept5 = pin(DD.exact_substring_dedup(kept4, k=4, min_df=2, max_coverage=0.5))
     scores = dsir_logweights(kept5, F.col("lang") == "en").select(
         "doc_id", "avg_logratio"
     )
     thr = scores.agg(
         F.percentile("avg_logratio", F.lit(0.2)).alias("__thr")
     )
-    kept6 = (
+    kept6 = pin(
         kept5.join(scores, on="doc_id")
         .crossJoin(F.broadcast(thr))
         .filter(F.col("avg_logratio") >= F.col("__thr"))
         .drop("avg_logratio", "__thr")
-        .localCheckpoint()
     )
     labeled = leakage_safe_split(
         kept6,
@@ -1386,7 +1366,7 @@ def q158_curation_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = read_table(spark, sf_dir, "documents")
     k1 = quality_filter_flags(d).filter(F.col("keep")).select("doc_id")
-    kept1 = d.join(k1, on="doc_id", how="left_semi").localCheckpoint(eager=False)
+    kept1 = pin(d.join(k1, on="doc_id", how="left_semi"))
 
     cont = DD.shingle_containment_pairs(kept1, k=3, threshold=0.6)
     rev = cont.select(
@@ -1402,7 +1382,7 @@ def q158_curation_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("id_a").alias("doc_id"))
         .distinct()
     )
-    kept2 = kept1.join(removal, on="doc_id", how="left_anti").localCheckpoint(eager=False)
+    kept2 = pin(kept1.join(removal, on="doc_id", how="left_anti"))
 
     pairs = DD.prefix_filter_jaccard_pairs(kept2, k=3, threshold=0.5)
     clusters = DD.dedup_clusters(pairs, kept2.select("doc_id"))
@@ -1604,12 +1584,12 @@ def _v6_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = read_table(spark, sf_dir, "documents")
     k1 = quality_filter_flags(d).filter(F.col("keep")).select("doc_id")
-    kept = d.join(k1, on="doc_id", how="left_semi").localCheckpoint(eager=False)
+    kept = pin(d.join(k1, on="doc_id", how="left_semi"))
 
     routed = naive_bayes_predictions(kept, "lang").filter(
         F.col("pred") == F.col("label")
     ).select("doc_id")
-    kept1 = kept.join(routed, on="doc_id", how="left_semi").localCheckpoint(eager=False)
+    kept1 = pin(kept.join(routed, on="doc_id", how="left_semi"))
 
     cont = DD.shingle_containment_pairs(kept1, k=3, threshold=0.6)
     rev = cont.select(
@@ -1625,7 +1605,7 @@ def _v6_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("id_a").alias("doc_id"))
         .distinct()
     )
-    kept2 = kept1.join(removal, on="doc_id", how="left_anti").localCheckpoint(eager=False)
+    kept2 = pin(kept1.join(removal, on="doc_id", how="left_anti"))
 
     pairs = DD.prefix_filter_jaccard_pairs(kept2, k=3, threshold=0.5)
     clusters = DD.dedup_clusters(pairs, kept2.select("doc_id"))

@@ -26,7 +26,7 @@ from bigdata_kafka_2_spark.plans import register
     "normalized (exact-DECIMAL sums, one orderkey join + one window "
     "that reuses the src clustering), each iteration is one src-keyed "
     "join + one dst-keyed map-side-combined aggregate + a broadcast "
-    "1-row dangling sum, and edges/nodes/ranks are localCheckpointed "
+    "1-row dangling sum, and edges/nodes/ranks are pinned "
     "so the k-iteration lineage stays LINEAR (the dataflow twin of "
     "the oracle's AS MATERIALIZED CTEs). Contributions round to "
     "integer 1e-12 units and sum as BIGINTs (exact and "
@@ -196,7 +196,7 @@ def _q163_oracle(sf_dir: str | None = None) -> str:
     "merges anything reachable; LPA finds densely-linked groups "
     "inside one component) and the engine's second iterative graph "
     "dataflow beyond PageRank: one src-keyed join + one map-side "
-    "count + one struct-max per round, label vector checkpointed so "
+    "count + one struct-max per round, label vector pinned so "
     "the lineage stays linear.",
     tags=("graph", "iterative", "aggregate"),
 )
@@ -229,7 +229,7 @@ def q163_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "domain-focused quality signal; global PageRank answers "
     "'central overall'). Same unrolled deterministic dataflow as "
     "q144 — integer-unit contribution sums, 12-dp re-rounding, "
-    "per-iteration checkpoint — with e(v) = 1/|S∩V| on members, 0 "
+    "per-iteration pin — with e(v) = 1/|S∩V| on members, 0 "
     "elsewhere, in both the restart term and the dangling "
     "redistribution; oracle transcribes the 5 iterations with the "
     "same membership predicate.",
@@ -362,7 +362,7 @@ def _kcore_oracle_sql(k: int, rounds: int) -> str:
     "away; a template cluster survives). Iterative peeling: per "
     "round one union + degree aggregate, a filter, two left-semi "
     "joins on the shrinking survivor set (AQE broadcasts it), "
-    "per-round localCheckpoint and ONE bounded scalar (the "
+    "per-round pin and ONE bounded scalar (the "
     "convergence test). Oracle: the peel unrolled 8 rounds over the "
     "same pair CTE — idempotent past the fixpoint, and the exact "
     "fixpoint check on the Spark side converges well inside that "
@@ -476,7 +476,7 @@ def q228_adamic_adar_links(
     "aggregates, "
     "re-round each half-step — bit-identical to the unrolled-CTE "
     "oracle. Two broadcast-guarded keyed joins per round, per-round "
-    "localCheckpoint keeps the 2k-join lineage linear.",
+    "pin keeps the 2k-join lineage linear.",
     tags=("graph", "iterative", "join", "aggregate"),
 )
 def q235_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -547,7 +547,7 @@ def q235_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     "this measures proximity — blast radius of a contaminated "
     "source, neighborhood growth around a seed corpus). Each hop is "
     "one keyed frontier join + one left-anti against the visited "
-    "set, localCheckpointed so the k-hop lineage stays linear "
+    "set, pinned so the k-hop lineage stays linear "
     "(the LPA/k-core loop discipline); per-hop driver work is one "
     "bounded count. The oracle unrolls the same four layers.",
     tags=("graph", "iterative", "join"),

@@ -21,37 +21,56 @@ from bigdata_kafka_2_spark.plans import register
     "q01_pricing_summary",
     oracle="""
     SELECT l_returnflag, l_linestatus,
-           round(sum(l_quantity), 2)                                    AS sum_qty,
-           round(sum(l_extendedprice), 2)                               AS sum_base_price,
-           round(sum(l_extendedprice * (1 - l_discount)), 2)            AS sum_disc_price,
-           round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-           round(avg(l_quantity), 4)                                    AS avg_qty,
-           round(avg(l_extendedprice), 4)                               AS avg_price,
-           round(avg(l_discount), 4)                                    AS avg_disc,
+           CAST(round(sum(qty), 2) AS DOUBLE)                           AS sum_qty,
+           CAST(round(sum(price), 2) AS DOUBLE)                         AS sum_base_price,
+           CAST(round(sum(price * (1 - disc)), 2) AS DOUBLE)            AS sum_disc_price,
+           CAST(round(sum(price * (1 - disc) * (1 + tax)), 2) AS DOUBLE) AS sum_charge,
+           round(avg(qty), 4)                                           AS avg_qty,
+           round(avg(price), 4)                                         AS avg_price,
+           round(avg(disc), 4)                                          AS avg_disc,
            count(*)                                                     AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+    FROM (SELECT l_returnflag, l_linestatus,
+                 CAST(l_quantity AS DECIMAL(15,2))      AS qty,
+                 CAST(l_extendedprice AS DECIMAL(15,2)) AS price,
+                 CAST(l_discount AS DECIMAL(15,2))      AS disc,
+                 CAST(l_tax AS DECIMAL(15,2))           AS tax
+          FROM lineitem
+          WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00')
     GROUP BY l_returnflag, l_linestatus
     """,
     description="TPC-H Q1 pricing summary: scan+filter+8-agg groupBy "
-    "(flagship; generalizes A1/A2 to the full agg surface).",
+    "(flagship; generalizes A1/A2 to the full agg surface). Measures "
+    "are cast to TPC-H's DECIMAL(15,2), so sums and averages are "
+    "exact and independent of summation order.",
     tags=("aggregate", "flagship"),
 )
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = read_table(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    qty, price, disc, tax = (
+        F.col(c).cast("decimal(15,2)")
+        for c in ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+    )
+    disc_price = price * (1 - disc)
+    n = F.count(F.lit(1))
+
+    def rounded(agg, scale: int):
+        return F.round(agg, scale).cast("double")
+
     return (
         l.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc_price), 2).alias("sum_disc_price"),
-            F.round(F.sum(disc_price * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
+            rounded(F.sum(qty), 2).alias("sum_qty"),
+            rounded(F.sum(price), 2).alias("sum_base_price"),
+            rounded(F.sum(disc_price), 2).alias("sum_disc_price"),
+            rounded(F.sum(disc_price * (1 + tax)), 2).alias("sum_charge"),
+            # exact decimal quotients: avg() of a DECIMAL(15,2) rounds
+            # at 6 dp first, and a second rounding to 4 dp can differ
+            # from the oracle's single rounding
+            rounded(F.sum(qty) / n, 4).alias("avg_qty"),
+            rounded(F.sum(price) / n, 4).alias("avg_price"),
+            rounded(F.sum(disc) / n, 4).alias("avg_disc"),
+            n.alias("count_order"),
         )
     )
 

@@ -35,6 +35,7 @@ from pyspark.sql import types as T
 
 from bigdata_kafka_2_spark.ml import knn as KNN
 from bigdata_kafka_2_spark.ml import pipelines as P
+from bigdata_kafka_2_spark.operators.common import pin, unpin
 
 #: Reference model-id → type map (api.py:19-22).
 MODEL_TYPES = {
@@ -160,13 +161,14 @@ class ModelServer:
         # model 3 serving table: distributed, NOT collected (vs api.py:110)
         self.serving_table = serving_table
         if serving_table is not None:
-            self.serving_table = serving_table.cache()
+            self.serving_table = pin(serving_table)
 
     def close(self) -> None:
-        """Release the cached KNN serving table, so a long-lived serving
-        process holds no pin it no longer serves."""
+        """Release the pinned KNN serving table, so a long-lived serving
+        process holds no pin it no longer serves. Model 3 cannot
+        predict after this."""
         if self.serving_table is not None:
-            self.serving_table.unpersist()
+            unpin(self.serving_table)
 
     # --- §3.2 predict dispatch (api.py:190-231) -------------------------
 

@@ -62,6 +62,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from bigdata_kafka_2_spark import get_spark  # noqa: E402
 from bigdata_kafka_2_spark.io import read_table  # noqa: E402
 from bigdata_kafka_2_spark.operators import dedup as DD  # noqa: E402
+from bigdata_kafka_2_spark.operators.common import pin  # noqa: E402
 from bigdata_kafka_2_spark.operators import sampling as SMP  # noqa: E402
 from bigdata_kafka_2_spark.operators import similarity as SIM  # noqa: E402
 from bigdata_kafka_2_spark.operators import text as TX  # noqa: E402
@@ -151,9 +152,9 @@ def run(spark, sf_dir: str) -> list[dict]:
         docs3.filter(F.col("doc_id") % 13 != 0), ev, k=4
     )
     # stage boundary #1: the lineage up to here includes the CC loop
-    # and every quality gate — materialize before the r8 stages
+    # and every quality gate — pin it before the r8 stages
     # re-reference it (fuzzy candidates + sets + anti = 3 references)
-    docs3 = docs3.localCheckpoint()
+    docs3 = pin(docs3)
     n3d = docs3.count()
     out.append({"stage": "decontaminate", "in": n3b, "out": n3d})
 
@@ -173,9 +174,9 @@ def run(spark, sf_dir: str) -> list[dict]:
     )
     # stage boundary #2: every downstream stage (tokens, split, pack,
     # gate, embed) re-reads the curated set across several jobs —
-    # materialize once more (the q81 lesson; a deployment writes the
+    # pin it once more (the q81 lesson; a deployment writes the
     # curated table here anyway)
-    docs3 = docs3.localCheckpoint()
+    docs3 = pin(docs3)
     n3d3 = docs3.count()
     out.append({"stage": "substring_filter", "in": n3d2, "out": n3d3})
 

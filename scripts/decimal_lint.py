@@ -17,9 +17,9 @@ cast products at small scales are the package's documented idiom and
 are exact by construction). Zero findings means no silent digit loss
 anywhere in the registry's decimal arithmetic.
 
-Blind spot, documented: subtrees behind ``localCheckpoint()`` are
-replaced by ``LogicalRDD`` at analysis time, so arithmetic INSIDE a
-checkpointed stage is invisible here — those stages are covered by
+Blind spot, documented: subtrees behind ``pin`` are replaced by
+``LogicalRDD`` at analysis time, so arithmetic INSIDE a pinned stage
+is invisible here — those stages are covered by
 the digit-exact regression tests (scales 9 and 12) on the prefix-sum
 and merge primitives they are built from.
 

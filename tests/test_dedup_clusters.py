@@ -20,6 +20,20 @@ def test_dedup_clusters_chain_and_singletons(spark):
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 21}
 
 
+def test_dedup_clusters_single_round_after_edge_unpin(spark):
+    # the edge pin is released before the plan is returned, so the
+    # labels the plan reads must already be materialized, also when
+    # the round budget stops the loop early
+    import pytest
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], ["id_a", "id_b"])
+    ids = spark.createDataFrame([(i,) for i in [1, 2, 3]], ["doc_id"])
+    out = DD.dedup_clusters(pairs, ids, max_iterations=1).collect()
+    assert {r.doc_id: r.cluster_rep for r in out} == {1: 1, 2: 1, 3: 2}
+    with pytest.raises(ValueError, match="max_iterations"):
+        DD.dedup_clusters(pairs, ids, max_iterations=0)
+
+
 def test_dedup_clusters_long_chain_converges(spark):
     # a 12-node path graph needs several propagation rounds
     pairs = spark.createDataFrame(
