@@ -663,6 +663,21 @@ def dedup_clusters(
     )
 
 
+def cluster_survivors(
+    df: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
+) -> DataFrame:
+    """Rows of ``df`` that survive near-dup clustering: connected
+    components over ``pairs`` (:func:`dedup_clusters`, singletons
+    included via ``df``'s ids), then a semi-join keeping the min-id
+    representative of each cluster."""
+    clusters = dedup_clusters(pairs, df.select(id_col), id_col)
+    keep = (
+        clusters.filter(F.col(id_col) == F.col("cluster_rep"))
+        .select(id_col)
+    )
+    return df.join(keep, on=id_col, how="left_semi")
+
+
 def near_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -692,12 +707,7 @@ def near_dedup(
         pairs = minhash_lsh_pairs(
             df, text_col, id_col, verify_threshold=est_threshold, **minhash_kwargs
         )
-    clusters = dedup_clusters(pairs, df.select(id_col), id_col)
-    keep = (
-        clusters.filter(F.col(id_col) == F.col("cluster_rep"))
-        .select(id_col)
-    )
-    return df.join(keep, on=id_col, how="left_semi")
+    return cluster_survivors(df, pairs, id_col)
 
 
 def simhash_bit_width(hash_fn: str) -> int:
@@ -1515,6 +1525,35 @@ def shingle_containment_pairs(
         .select("id_a", "id_b", cont.alias("containment"))
         .filter(F.col("containment") >= threshold)
     )
+
+
+def containment_removal(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    k: int = 3,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """Rows of ``df`` left after dropping every document that is at
+    least ``threshold`` contained in another
+    (:func:`shingle_containment_pairs`). When two documents contain
+    each other, the lower id stays; a one-way containment drops the
+    contained side."""
+    cont = shingle_containment_pairs(df, text_col, id_col, k, threshold)
+    rev = cont.select(
+        F.col("id_a").alias("__ra"), F.col("id_b").alias("__rb")
+    )
+    removal = (
+        cont.join(
+            rev,
+            (cont["id_a"] == rev["__rb"]) & (cont["id_b"] == rev["__ra"]),
+            "left",
+        )
+        .filter(F.col("__ra").isNull() | (F.col("id_a") > F.col("id_b")))
+        .select(F.col("id_a").alias(id_col))
+        .distinct()
+    )
+    return df.join(removal, on=id_col, how="left_anti")
 
 
 def _jvm_size_bytes(size: str, default: int = 1 << 30) -> int:

@@ -133,6 +133,35 @@ def node_label(name: str) -> F.Column:
     return expr
 
 
+def _dangling_units(ranks: DataFrame) -> int:
+    """Rank mass on dangling nodes (``__dang``) in integer 1e-12
+    units — a bounded 1-row scalar collect (the ``n = count()``
+    rule), which also materializes the pinned rank vector."""
+    return ranks.filter(F.col("__dang")).agg(
+        F.coalesce(
+            F.sum(F.round(F.col("rank") * F.lit(float(_UNIT)), 0).cast("long")),
+            F.lit(0).cast("long"),
+        ).alias("__mu")
+    ).collect()[0]["__mu"]
+
+
+def _contributions(edges: DataFrame, ranks: DataFrame, bc) -> DataFrame:
+    """Per-destination inbound rank ``Σ r(u)·w(u,v)`` as ``(dst,
+    __cu)`` in integer 1e-12 units: the rank vector (through ``bc``,
+    broadcast or identity) joined onto the edges, summed by ``dst``."""
+    return (
+        edges.join(bc(ranks.select("node", "rank")), edges.src == F.col("node"))
+        .groupBy("dst")
+        .agg(
+            F.sum(
+                F.round(
+                    F.col("rank") * F.col("w") * F.lit(float(_UNIT)), 0
+                ).cast("long")
+            ).alias("__cu")
+        )
+    )
+
+
 def pagerank(
     spark: SparkSession,
     edges: DataFrame,
@@ -217,33 +246,10 @@ def pagerank(
         "node", "__dang", F.round(F.lit(1.0 / n), _RANK_SCALE).alias("rank")
     )
     for _ in range(iterations):
-        # Dangling mass as a bounded 1-row scalar (the n=count() rule),
-        # collected FIRST: it materializes the pinned rank vector
+        # Dangling mass first: it materializes the pinned rank vector
         # before the two broadcast builds below read it.
-        mu = ranks.filter(F.col("__dang")).agg(
-            F.coalesce(
-                F.sum(
-                    F.round(
-                        F.col("rank") * F.lit(float(_UNIT)), 0
-                    ).cast("long")
-                ),
-                F.lit(0).cast("long"),
-            ).alias("__mu")
-        ).collect()[0]["__mu"]
-        contribs = (
-            edges.join(
-                bc(ranks.select("node", "rank")),
-                edges.src == F.col("node"),
-            )
-            .groupBy("dst")
-            .agg(
-                F.sum(
-                    F.round(
-                        F.col("rank") * F.col("w") * F.lit(float(_UNIT)), 0
-                    ).cast("long")
-                ).alias("__cu")
-            )
-        )
+        mu = _dangling_units(ranks)
+        contribs = _contributions(edges, ranks, bc)
         ranks = pin(
             nodes.join(bc(contribs), nodes.node == contribs.dst, "left")
             .select(
@@ -673,30 +679,9 @@ def personalized_pagerank(
         F.round(F.col("__e"), _RANK_SCALE).alias("rank"),
     )
     for _ in range(iterations):
-        # bounded 1-row dangling-mass scalar, collected first (see
-        # pagerank)
-        mu = ranks.filter(F.col("__dang")).agg(
-            F.coalesce(
-                F.sum(
-                    F.round(
-                        F.col("rank") * F.lit(float(_UNIT)), 0
-                    ).cast("long")
-                ),
-                F.lit(0).cast("long"),
-            ).alias("__mu")
-        ).collect()[0]["__mu"]
-        contribs = (
-            edges.join(bc(ranks.select("node", "rank")),
-                       edges.src == F.col("node"))
-            .groupBy("dst")
-            .agg(
-                F.sum(
-                    F.round(
-                        F.col("rank") * F.col("w") * F.lit(float(_UNIT)), 0
-                    ).cast("long")
-                ).alias("__cu")
-            )
-        )
+        # dangling mass first (see pagerank)
+        mu = _dangling_units(ranks)
+        contribs = _contributions(edges, ranks, bc)
         ranks = pin(
             nodes.join(bc(contribs), nodes.node == contribs.dst, "left")
             .select(

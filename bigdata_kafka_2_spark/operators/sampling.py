@@ -58,6 +58,33 @@ def hash_split(
     )
 
 
+def _cluster_bucketed(
+    df, text_col, id_col, jaccard_threshold, seed, bucket_fn, **minhash_kwargs
+):
+    """``df`` joined to its near-dup cluster map (verified MinHash-LSH
+    pairs → :func:`dedup_clusters`), and the [0, 1e6) bucket Column of
+    each row's ``cluster_rep`` — ``bucket_fn(rep)`` when given, else
+    the seeded xxhash64 bucket. Shared by the leakage-safe split and
+    folds, which differ only in how they label the bucket."""
+    from bigdata_kafka_2_spark.operators.dedup import (
+        dedup_clusters,
+        minhash_lsh_verified_pairs,
+    )
+
+    pairs = minhash_lsh_verified_pairs(
+        df, text_col, id_col, jaccard_threshold=jaccard_threshold,
+        **minhash_kwargs,
+    )
+    clusters = dedup_clusters(pairs, df.select(id_col), id_col)
+    rep = F.col("cluster_rep")
+    bucket = (
+        bucket_fn(rep)
+        if bucket_fn is not None
+        else F.pmod(F.xxhash64(rep, F.lit(seed)), F.lit(_BUCKETS))
+    )
+    return df.join(clusters, on=id_col), bucket
+
+
 def leakage_safe_split(
     df: DataFrame,
     fractions: Mapping[str, float],
@@ -106,25 +133,11 @@ def leakage_safe_split(
     bucket) overrides the production seeded-xxhash64 bucket for the
     oracle gate (q91's portability pattern).
     """
-    from bigdata_kafka_2_spark.operators.dedup import (
-        dedup_clusters,
-        minhash_lsh_verified_pairs,
-    )
-
-    pairs = minhash_lsh_verified_pairs(
-        df, text_col, id_col, jaccard_threshold=jaccard_threshold,
+    joined, bucket = _cluster_bucketed(
+        df, text_col, id_col, jaccard_threshold, seed, bucket_fn,
         **minhash_kwargs,
     )
-    clusters = dedup_clusters(pairs, df.select(id_col), id_col)
-    rep = F.col("cluster_rep")
-    bucket = (
-        bucket_fn(rep)
-        if bucket_fn is not None
-        else F.pmod(F.xxhash64(rep, F.lit(seed)), F.lit(_BUCKETS))
-    )
-    return df.join(clusters, on=id_col).withColumn(
-        out_col, split_expr(bucket, fractions)
-    )
+    return joined.withColumn(out_col, split_expr(bucket, fractions))
 
 
 def deterministic_sample(
@@ -538,25 +551,11 @@ def leakage_safe_folds(
     bounded by the dup subgraph, then one equi-join of the cluster
     map plus a row-local hash.
     """
-    from bigdata_kafka_2_spark.operators.dedup import (
-        dedup_clusters,
-        minhash_lsh_verified_pairs,
-    )
-
-    pairs = minhash_lsh_verified_pairs(
-        df, text_col, id_col, jaccard_threshold=jaccard_threshold,
+    joined, bucket = _cluster_bucketed(
+        df, text_col, id_col, jaccard_threshold, seed, bucket_fn,
         **minhash_kwargs,
     )
-    clusters = dedup_clusters(pairs, df.select(id_col), id_col)
-    rep = F.col("cluster_rep")
-    bucket = (
-        bucket_fn(rep)
-        if bucket_fn is not None
-        else F.pmod(F.xxhash64(rep, F.lit(seed)), F.lit(_BUCKETS))
-    )
-    return df.join(clusters, on=id_col).withColumn(
-        out_col, F.pmod(bucket, F.lit(k)).cast("int")
-    )
+    return joined.withColumn(out_col, F.pmod(bucket, F.lit(k)).cast("int"))
 
 
 def budget_fill(

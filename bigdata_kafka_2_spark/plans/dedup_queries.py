@@ -8,9 +8,72 @@ from pyspark.sql import functions as F
 from bigdata_kafka_2_spark.io import read_table
 from bigdata_kafka_2_spark.operators import dedup as DD
 from bigdata_kafka_2_spark.operators.common import pin
+from bigdata_kafka_2_spark.operators.sampling import leakage_safe_split
+from bigdata_kafka_2_spark.operators.text import (
+    quality_filter_flags,
+    repetition_stats,
+)
 from bigdata_kafka_2_spark.plans import REGISTRY, register
 
 _NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
+
+
+# Stages shared by the curation queries (q66, q81, q110, q127, q158,
+# q183, q214, q238). Each is a plain function of its input frame, and
+# each query is a short chain of calls to them.
+
+
+def _quality_kept(d: DataFrame) -> DataFrame:
+    """Rows of ``d`` that pass q49's quality filter
+    (operators/text.quality_filter_flags defaults)."""
+    keep_ids = quality_filter_flags(d).filter(F.col("keep")).select("doc_id")
+    return d.join(keep_ids, on="doc_id", how="left_semi")
+
+
+def _v2_kept(d: DataFrame) -> DataFrame:
+    """q81's curated set: the training side of the ``doc_id % 13``
+    split, quality-filtered, repetition-filtered and (pinned) exact-
+    decontaminated against the held-out slice."""
+    ev = d.filter(F.col("doc_id") % 13 == 0)
+    kept1 = _quality_kept(d.filter(F.col("doc_id") % 13 != 0))
+    k2 = (
+        repetition_stats(kept1, n=2, max_top_frac=0.05, max_dup_frac=0.05)
+        .filter(F.col("keep"))
+        .select("doc_id")
+    )
+    kept2 = kept1.join(k2, on="doc_id", how="left_semi")
+    return pin(DD.decontaminate(kept2, ev, k=4, min_shared=1))
+
+
+def _v3_kept(d: DataFrame) -> DataFrame:
+    """q110's curated set: :func:`_v2_kept`, then pinned fuzzy
+    decontamination and the pinned repeated-substring filter."""
+    ev = d.filter(F.col("doc_id") % 13 == 0)
+    kept4 = pin(DD.fuzzy_decontaminate(_v2_kept(d), ev, k=3, threshold=0.3))
+    return pin(DD.exact_substring_dedup(kept4, k=4, min_df=2, max_coverage=0.5))
+
+
+def _portable_bucket(rep):
+    """Multiplicative-hash bucket in [0, 1e6) of a cluster
+    representative — the oracles transcribe it as
+    ``(rep * 2654435761) % 1000000`` (q91's portability pattern)."""
+    return F.pmod(rep * F.lit(2654435761), F.lit(1_000_000))
+
+
+def _split_profile(kept: DataFrame) -> DataFrame:
+    """Leakage-safe 80/10/10 split of ``kept`` on the portable bucket,
+    profiled per split."""
+    labeled = leakage_safe_split(
+        kept,
+        {"train": 0.8, "val": 0.1, "test": 0.1},
+        jaccard_threshold=0.5,
+        bucket_fn=_portable_bucket,
+    )
+    return labeled.groupBy("split").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.countDistinct("cluster_rep").alias("n_clusters"),
+        F.round(F.avg("n_chars"), 4).alias("avg_chars"),
+    )
 
 
 @register(
@@ -308,14 +371,8 @@ _QUALITY_KEPT_CTE = r"""
     tags=("dedup", "text", "sampling", "flagship"),
 )
 def q66_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from bigdata_kafka_2_spark.operators.text import quality_filter_flags
-
     d = read_table(spark, sf_dir, "documents")
-    keep_ids = quality_filter_flags(d).filter(F.col("keep")).select("doc_id")
-    kept = d.join(keep_ids, on="doc_id", how="left_semi")
-    survivors = DD.near_dedup(kept, est_threshold=0.5, verify=True)
+    survivors = DD.near_dedup(_quality_kept(d), est_threshold=0.5, verify=True)
     split = (
         F.when(F.col("doc_id") % 10 < 8, F.lit("train"))
         .when(F.col("doc_id") % 10 == 8, F.lit("val"))
@@ -416,16 +473,12 @@ def q74_contamination_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sampling", "dedup"),
 )
 def q79_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdata_kafka_2_spark.operators.sampling import leakage_safe_split
-
     d = read_table(spark, sf_dir, "documents")
     labeled = leakage_safe_split(
         d,
         {"train": 0.8, "val": 0.1, "test": 0.1},
         jaccard_threshold=0.5,
-        bucket_fn=lambda rep: F.pmod(
-            rep * F.lit(2654435761), F.lit(1_000_000)
-        ),
+        bucket_fn=_portable_bucket,
     )
     return labeled.groupBy("split").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -544,37 +597,7 @@ _Q81_ORACLE = (
     tags=("dedup", "sampling", "text", "flagship"),
 )
 def q81_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdata_kafka_2_spark.operators.sampling import leakage_safe_split
-    from bigdata_kafka_2_spark.operators.text import (
-        quality_filter_flags,
-        repetition_stats,
-    )
-
-    d = read_table(spark, sf_dir, "documents")
-    ev = d.filter(F.col("doc_id") % 13 == 0)
-    train = d.filter(F.col("doc_id") % 13 != 0)
-    k1 = quality_filter_flags(train).filter(F.col("keep")).select("doc_id")
-    kept1 = train.join(k1, on="doc_id", how="left_semi")
-    k2 = (
-        repetition_stats(kept1, n=2, max_top_frac=0.05, max_dup_frac=0.05)
-        .filter(F.col("keep"))
-        .select("doc_id")
-    )
-    kept2 = kept1.join(k2, on="doc_id", how="left_semi")
-    kept3 = pin(DD.decontaminate(kept2, ev, k=4, min_shared=1))
-    labeled = leakage_safe_split(
-        kept3,
-        {"train": 0.8, "val": 0.1, "test": 0.1},
-        jaccard_threshold=0.5,
-        bucket_fn=lambda rep: F.pmod(
-            rep * F.lit(2654435761), F.lit(1_000_000)
-        ),
-    )
-    return labeled.groupBy("split").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct("cluster_rep").alias("n_clusters"),
-        F.round(F.avg("n_chars"), 4).alias("avg_chars"),
-    )
+    return _split_profile(_v2_kept(read_table(spark, sf_dir, "documents")))
 
 
 @register(
@@ -933,39 +956,7 @@ _Q110_ORACLE = (
     tags=("dedup", "sampling", "text", "flagship"),
 )
 def q110_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdata_kafka_2_spark.operators.sampling import leakage_safe_split
-    from bigdata_kafka_2_spark.operators.text import (
-        quality_filter_flags,
-        repetition_stats,
-    )
-
-    d = read_table(spark, sf_dir, "documents")
-    ev = d.filter(F.col("doc_id") % 13 == 0)
-    train = d.filter(F.col("doc_id") % 13 != 0)
-    k1 = quality_filter_flags(train).filter(F.col("keep")).select("doc_id")
-    kept1 = train.join(k1, on="doc_id", how="left_semi")
-    k2 = (
-        repetition_stats(kept1, n=2, max_top_frac=0.05, max_dup_frac=0.05)
-        .filter(F.col("keep"))
-        .select("doc_id")
-    )
-    kept2 = kept1.join(k2, on="doc_id", how="left_semi")
-    kept3 = pin(DD.decontaminate(kept2, ev, k=4, min_shared=1))
-    kept4 = pin(DD.fuzzy_decontaminate(kept3, ev, k=3, threshold=0.3))
-    kept5 = pin(DD.exact_substring_dedup(kept4, k=4, min_df=2, max_coverage=0.5))
-    labeled = leakage_safe_split(
-        kept5,
-        {"train": 0.8, "val": 0.1, "test": 0.1},
-        jaccard_threshold=0.5,
-        bucket_fn=lambda rep: F.pmod(
-            rep * F.lit(2654435761), F.lit(1_000_000)
-        ),
-    )
-    return labeled.groupBy("split").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct("cluster_rep").alias("n_clusters"),
-        F.round(F.avg("n_chars"), 4).alias("avg_chars"),
-    )
+    return _split_profile(_v3_kept(read_table(spark, sf_dir, "documents")))
 
 
 @register(
@@ -1108,29 +1099,9 @@ def _q127_oracle(sf_dir: str | None = None) -> str:
     tags=("dedup", "sampling", "text", "flagship"),
 )
 def q127_curation_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdata_kafka_2_spark.operators.sampling import (
-        dsir_logweights,
-        leakage_safe_split,
-    )
-    from bigdata_kafka_2_spark.operators.text import (
-        quality_filter_flags,
-        repetition_stats,
-    )
+    from bigdata_kafka_2_spark.operators.sampling import dsir_logweights
 
-    d = read_table(spark, sf_dir, "documents")
-    ev = d.filter(F.col("doc_id") % 13 == 0)
-    train = d.filter(F.col("doc_id") % 13 != 0)
-    k1 = quality_filter_flags(train).filter(F.col("keep")).select("doc_id")
-    kept1 = train.join(k1, on="doc_id", how="left_semi")
-    k2 = (
-        repetition_stats(kept1, n=2, max_top_frac=0.05, max_dup_frac=0.05)
-        .filter(F.col("keep"))
-        .select("doc_id")
-    )
-    kept2 = kept1.join(k2, on="doc_id", how="left_semi")
-    kept3 = pin(DD.decontaminate(kept2, ev, k=4, min_shared=1))
-    kept4 = pin(DD.fuzzy_decontaminate(kept3, ev, k=3, threshold=0.3))
-    kept5 = pin(DD.exact_substring_dedup(kept4, k=4, min_df=2, max_coverage=0.5))
+    kept5 = _v3_kept(read_table(spark, sf_dir, "documents"))
     scores = dsir_logweights(kept5, F.col("lang") == "en").select(
         "doc_id", "avg_logratio"
     )
@@ -1143,19 +1114,7 @@ def q127_curation_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("avg_logratio") >= F.col("__thr"))
         .drop("avg_logratio", "__thr")
     )
-    labeled = leakage_safe_split(
-        kept6,
-        {"train": 0.8, "val": 0.1, "test": 0.1},
-        jaccard_threshold=0.5,
-        bucket_fn=lambda rep: F.pmod(
-            rep * F.lit(2654435761), F.lit(1_000_000)
-        ),
-    )
-    return labeled.groupBy("split").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct("cluster_rep").alias("n_clusters"),
-        F.round(F.avg("n_chars"), 4).alias("avg_chars"),
-    )
+    return _split_profile(kept6)
 
 
 @register(
@@ -1203,9 +1162,7 @@ def q134_leakage_safe_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
         d,
         k=5,
         jaccard_threshold=0.5,
-        bucket_fn=lambda rep: F.pmod(
-            rep * F.lit(2654435761), F.lit(1_000_000)
-        ),
+        bucket_fn=_portable_bucket,
     )
     return labeled.groupBy("fold").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1362,37 +1319,11 @@ def q151_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "text", "flagship"),
 )
 def q158_curation_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdata_kafka_2_spark.operators.text import quality_filter_flags
-
     d = read_table(spark, sf_dir, "documents")
-    k1 = quality_filter_flags(d).filter(F.col("keep")).select("doc_id")
-    kept1 = pin(d.join(k1, on="doc_id", how="left_semi"))
-
-    cont = DD.shingle_containment_pairs(kept1, k=3, threshold=0.6)
-    rev = cont.select(
-        F.col("id_a").alias("__ra"), F.col("id_b").alias("__rb")
-    )
-    removal = (
-        cont.join(
-            rev,
-            (cont["id_a"] == rev["__rb"]) & (cont["id_b"] == rev["__ra"]),
-            "left",
-        )
-        .filter(F.col("__ra").isNull() | (F.col("id_a") > F.col("id_b")))
-        .select(F.col("id_a").alias("doc_id"))
-        .distinct()
-    )
-    kept2 = pin(kept1.join(removal, on="doc_id", how="left_anti"))
-
+    kept1 = pin(_quality_kept(d))
+    kept2 = pin(DD.containment_removal(kept1, k=3, threshold=0.6))
     pairs = DD.prefix_filter_jaccard_pairs(kept2, k=3, threshold=0.5)
-    clusters = DD.dedup_clusters(pairs, kept2.select("doc_id"))
-    survivors = kept2.join(
-        clusters.filter(F.col("doc_id") == F.col("cluster_rep")).select(
-            "doc_id"
-        ),
-        on="doc_id",
-        how="left_semi",
-    )
+    survivors = DD.cluster_survivors(kept2, pairs)
     return survivors.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.round(F.avg("n_chars"), 4).alias("avg_chars"),
@@ -1580,42 +1511,16 @@ def _v6_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_kafka_2_spark.operators.classify import (
         naive_bayes_predictions,
     )
-    from bigdata_kafka_2_spark.operators.text import quality_filter_flags
 
     d = read_table(spark, sf_dir, "documents")
-    k1 = quality_filter_flags(d).filter(F.col("keep")).select("doc_id")
-    kept = pin(d.join(k1, on="doc_id", how="left_semi"))
-
+    kept = pin(_quality_kept(d))
     routed = naive_bayes_predictions(kept, "lang").filter(
         F.col("pred") == F.col("label")
     ).select("doc_id")
     kept1 = pin(kept.join(routed, on="doc_id", how="left_semi"))
-
-    cont = DD.shingle_containment_pairs(kept1, k=3, threshold=0.6)
-    rev = cont.select(
-        F.col("id_a").alias("__ra"), F.col("id_b").alias("__rb")
-    )
-    removal = (
-        cont.join(
-            rev,
-            (cont["id_a"] == rev["__rb"]) & (cont["id_b"] == rev["__ra"]),
-            "left",
-        )
-        .filter(F.col("__ra").isNull() | (F.col("id_a") > F.col("id_b")))
-        .select(F.col("id_a").alias("doc_id"))
-        .distinct()
-    )
-    kept2 = pin(kept1.join(removal, on="doc_id", how="left_anti"))
-
+    kept2 = pin(DD.containment_removal(kept1, k=3, threshold=0.6))
     pairs = DD.prefix_filter_jaccard_pairs(kept2, k=3, threshold=0.5)
-    clusters = DD.dedup_clusters(pairs, kept2.select("doc_id"))
-    return kept2.join(
-        clusters.filter(F.col("doc_id") == F.col("cluster_rep")).select(
-            "doc_id"
-        ),
-        on="doc_id",
-        how="left_semi",
-    )
+    return DD.cluster_survivors(kept2, pairs)
 
 
 @register(
@@ -1704,6 +1609,51 @@ def _v7_redact_sql(col: str = "text") -> str:
     return expr
 
 
+def _v7_release(survivors: DataFrame) -> DataFrame:
+    """The v7 release stage: the :func:`_v7_inject_sql` contact line
+    appended to each survivor's text, then the fused PII scan +
+    redaction (operators/pii.pii_release) with ``lang`` threaded
+    through."""
+    from bigdata_kafka_2_spark.operators.pii import pii_release
+
+    did = F.col("doc_id")
+    inj = F.concat(
+        F.col("text"),
+        F.lit(" contact u"),
+        did.cast("string"),
+        F.lit("@ex.com "),
+        F.lit("555-"),
+        F.lpad((did % 1000).cast("string"), 3, "0"),
+        F.lit("-"),
+        F.lpad((did % 10000).cast("string"), 4, "0"),
+        F.when(
+            did % 3 == 0,
+            F.concat(
+                F.lit(" "),
+                F.lpad((did % 1000).cast("string"), 3, "0"),
+                F.lit("-"),
+                F.lpad((did % 100).cast("string"), 2, "0"),
+                F.lit("-"),
+                F.lpad((did % 10000).cast("string"), 4, "0"),
+            ),
+        ).otherwise(F.lit("")),
+    )
+    rel = survivors.select("lang", "doc_id", inj.alias("text"))
+    return pii_release(rel, "text", "doc_id", keep_cols=("lang",))
+
+
+def _release_profile(red: DataFrame) -> DataFrame:
+    """Per-language release audit: documents, redactions and mean
+    post-redaction length."""
+    return red.groupBy("lang").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_pii").cast("long").alias("n_pii"),
+        F.round(F.avg(F.length("redacted")), 4).alias(
+            "avg_redacted_chars"
+        ),
+    )
+
+
 def _v7_oracle() -> str:
     from bigdata_kafka_2_spark.operators.pii import PII_PATTERNS
 
@@ -1756,40 +1706,7 @@ def _v7_oracle() -> str:
     tags=("dedup", "text", "pii", "flagship"),
 )
 def q214_curation_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdata_kafka_2_spark.operators.pii import pii_release
-
-    survivors = _v6_survivors(spark, sf_dir)
-    did = F.col("doc_id")
-    inj = F.concat(
-        F.col("text"),
-        F.lit(" contact u"),
-        did.cast("string"),
-        F.lit("@ex.com "),
-        F.lit("555-"),
-        F.lpad((did % 1000).cast("string"), 3, "0"),
-        F.lit("-"),
-        F.lpad((did % 10000).cast("string"), 4, "0"),
-        F.when(
-            did % 3 == 0,
-            F.concat(
-                F.lit(" "),
-                F.lpad((did % 1000).cast("string"), 3, "0"),
-                F.lit("-"),
-                F.lpad((did % 100).cast("string"), 2, "0"),
-                F.lit("-"),
-                F.lpad((did % 10000).cast("string"), 4, "0"),
-            ),
-        ).otherwise(F.lit("")),
-    )
-    rel = survivors.select("lang", "doc_id", inj.alias("text"))
-    red = pii_release(rel, "text", "doc_id", keep_cols=("lang",))
-    return red.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_pii").cast("long").alias("n_pii"),
-        F.round(F.avg(F.length("redacted")), 4).alias(
-            "avg_redacted_chars"
-        ),
-    )
+    return _release_profile(_v7_release(_v6_survivors(spark, sf_dir)))
 
 
 def _v8_oracle() -> str:
@@ -1854,34 +1771,9 @@ def _v8_oracle() -> str:
     tags=("dedup", "text", "pii", "sampling", "flagship"),
 )
 def q238_curation_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdata_kafka_2_spark.operators.pii import pii_release
     from bigdata_kafka_2_spark.operators.sampling import weighted_sample
 
-    survivors = _v6_survivors(spark, sf_dir)
-    did = F.col("doc_id")
-    inj = F.concat(
-        F.col("text"),
-        F.lit(" contact u"),
-        did.cast("string"),
-        F.lit("@ex.com "),
-        F.lit("555-"),
-        F.lpad((did % 1000).cast("string"), 3, "0"),
-        F.lit("-"),
-        F.lpad((did % 10000).cast("string"), 4, "0"),
-        F.when(
-            did % 3 == 0,
-            F.concat(
-                F.lit(" "),
-                F.lpad((did % 1000).cast("string"), 3, "0"),
-                F.lit("-"),
-                F.lpad((did % 100).cast("string"), 2, "0"),
-                F.lit("-"),
-                F.lpad((did % 10000).cast("string"), 4, "0"),
-            ),
-        ).otherwise(F.lit("")),
-    )
-    rel = survivors.select("lang", "doc_id", inj.alias("text"))
-    red = pii_release(rel, "text", "doc_id", keep_cols=("lang",)).withColumn(
+    red = _v7_release(_v6_survivors(spark, sf_dir)).withColumn(
         "__w", F.length("redacted")
     )
     u = (
@@ -1898,13 +1790,7 @@ def q238_curation_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.lit(0.5)
     ) / F.lit(float(1 << 60))
     picked = weighted_sample(red, "__w", 50, "doc_id", u=u)
-    return picked.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_pii").cast("long").alias("n_pii"),
-        F.round(F.avg(F.length("redacted")), 4).alias(
-            "avg_redacted_chars"
-        ),
-    )
+    return _release_profile(picked)
 
 
 @register(

@@ -89,22 +89,8 @@ def run(spark, sf_dir: str) -> list[dict]:
     # 2b. containment removal (r8 cont.): embedded quotes/boilerplate
     #     wrappers that symmetric Jaccard never flags — drop docs
     #     ≥0.7 contained in a surviving doc (mutual containments keep
-    #     the lower id); operators/dedup.shingle_containment_pairs
-    cont = DD.shingle_containment_pairs(docs2, k=3, threshold=0.7)
-    rev = cont.select(
-        F.col("id_a").alias("__ra"), F.col("id_b").alias("__rb")
-    )
-    removal = (
-        cont.join(
-            rev,
-            (cont["id_a"] == rev["__rb"]) & (cont["id_b"] == rev["__ra"]),
-            "left",
-        )
-        .filter(F.col("__ra").isNull() | (F.col("id_a") > F.col("id_b")))
-        .select(F.col("id_a").alias("doc_id"))
-        .distinct()
-    )
-    docs2 = docs2.join(removal, "doc_id", "left_anti")
+    #     the lower id); operators/dedup.containment_removal
+    docs2 = DD.containment_removal(docs2, k=3, threshold=0.7)
     n2b = docs2.count()
     out.append({"stage": "containment_removal", "in": n2, "out": n2b})
 
@@ -114,7 +100,7 @@ def run(spark, sf_dir: str) -> list[dict]:
         (F.col("stat_tokens") >= 5) & (F.col("stat_alpha_ratio") >= 0.5)
     ).select("doc_id", "text")
     n3 = docs3.count()
-    out.append({"stage": "quality_filter", "in": n2, "out": n3})
+    out.append({"stage": "quality_filter", "in": n2b, "out": n3})
 
     # 3b. repetition gate (r7): drop boilerplate/spam-shaped docs whose
     #     token 2-grams concentrate (operators/text.repetition_stats)

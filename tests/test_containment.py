@@ -51,6 +51,58 @@ def test_containment_bruteforce_parity(spark):
     assert brute, "fixture should contain containment pairs"
 
 
+def test_containment_removal_planted(spark):
+    """A short quote inside a longer doc is dropped; of two docs that
+    contain each other the lower id stays; an unrelated doc stays."""
+    quote = "the five boxing wizards jump quickly over the lazy dog"
+    filler = " ".join(f"filler{i} words{i} extra{i}" for i in range(40))
+    twin = "pack my box with five dozen liquor jugs right now please"
+    d = spark.createDataFrame(
+        [
+            (1, quote),
+            (2, filler + " " + quote + " " + filler),
+            (3, twin),
+            (4, twin),
+            (5, "an unrelated sentence about spark clusters and shuffles"),
+        ],
+        ["doc_id", "text"],
+    )
+    kept = DD.containment_removal(d, k=3, threshold=0.5)
+    assert sorted(r["doc_id"] for r in kept.collect()) == [2, 3, 5]
+    assert kept.columns == d.columns
+
+
+def test_containment_removal_bruteforce_parity(spark):
+    """On the fixture, the kept ids equal the rule applied to the
+    brute-force containment pairs: drop a if a is contained in b and
+    either b is not contained in a or a > b."""
+    d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    sets = {
+        r["doc_id"]: set(r["shingle_set"])
+        for r in DD.shingle_sets(d, "text", "doc_id", 3).collect()
+    }
+
+    def contained(a, b):
+        sa = sets.get(a)
+        return bool(sa) and round(len(sa & sets[b]) / len(sa), 4) >= 0.5
+
+    ids = [r["doc_id"] for r in d.select("doc_id").collect()]
+    dropped = {
+        a
+        for a in sets
+        for b in sets
+        if a != b and contained(a, b) and (not contained(b, a) or a > b)
+    }
+    got = sorted(
+        r["doc_id"]
+        for r in DD.containment_removal(d, k=3, threshold=0.5)
+        .select("doc_id")
+        .collect()
+    )
+    assert got == sorted(i for i in ids if i not in dropped)
+    assert dropped, "fixture should contain contained docs"
+
+
 def test_weighted_vs_set_jaccard_distinguishes_repeats(spark):
     """Repeat-heavy doc vs its single-copy source: the shared token
     SET is identical (set-Jaccard on 1-grams would be 1.0) but the

@@ -468,14 +468,23 @@ def test_curation_pipeline_example(spark):
     stages = {s["stage"]: s for s in run(spark, SF_DIR)}
     assert stages["dedup_exact"]["out"] <= stages["dedup_exact"]["in"]
     assert stages["dedup_near"]["out"] <= stages["dedup_near"]["in"]
+    assert (
+        stages["containment_removal"]["out"]
+        <= stages["containment_removal"]["in"]
+    )
     assert stages["quality_filter"]["out"] <= stages["quality_filter"]["in"]
     assert (
         stages["repetition_filter"]["out"] <= stages["repetition_filter"]["in"]
     )
     assert stages["pii_scrub"]["flagged"] >= 0
     assert stages["decontaminate"]["out"] <= stages["decontaminate"]["in"]
+    assert (
+        stages["fuzzy_decontaminate"]["out"]
+        <= stages["fuzzy_decontaminate"]["in"]
+    )
+    assert stages["substring_filter"]["out"] <= stages["substring_filter"]["in"]
     assert stages["lm_score"]["min_logprob"] <= stages["lm_score"]["avg_logprob"] <= 0
-    n_final = stages["decontaminate"]["out"]
+    n_final = stages["substring_filter"]["out"]
     split = stages["split"]
     assert split["train"] + split.get("val", 0) + split.get("test", 0) == n_final
     assert stages["embed_store"]["vectors"] == n_final
